@@ -28,11 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.extensions.text import tokens
-from bdc_collection_builder_spark.functions.persist import (
-    ab_tracked_persist,
-    tracked_persist,
-)
-from bdc_collection_builder_spark.functions.rounds import note_rounds
+from bdc_collection_builder_spark.functions.iterate import iterate
+from bdc_collection_builder_spark.functions.persist import tracked_persist
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text",
@@ -252,7 +249,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         # self-join; without the persist the 32-min aggregate over the
         # whole shingle table replays once per side (|frame| << producing
         # work, the round-10 persist rule)
-        sig = ab_tracked_persist("minhash_sig", sig)
+        sig = tracked_persist(sig)
     else:
         # Production path: collapse each shingle string to its xxhash64
         # ONCE, inside the per-doc array (shingles(hashed=True)) — the
@@ -266,7 +263,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         sh = tracked_persist(shingles(docs, text_col, id_col, k, hashed=True))
         sig = minhash_signatures_from_shingles(sh, n_hashes, "prehashed")
         # same both-sides-of-the-self-join reuse as the md5 branch
-        sig = ab_tracked_persist("minhash_sig", sig)
+        sig = tracked_persist(sig)
 
     candidates = lsh_candidates(sig, bands, rows_per_band,
                                 engine_neutral)
@@ -553,25 +550,26 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         both.select(F.col("a").alias("doc_id")).distinct()
         .withColumn("component_id", F.col("doc_id"))
     )
-    for _ in range(max_iter):
-        note_rounds(1)
+
+    def propagate(state: DataFrame, _i: int) -> DataFrame:
+        labels = state.select("doc_id", "component_id")
         # smallest neighbor label per node, then min with own label
         neighbor_min = (
             both.join(labels, both.b == labels.doc_id)
             .groupBy(F.col("a").alias("doc_id"))
             .agg(F.min("component_id").alias("nbr_min"))
         )
-        updated = (
+        return (
             labels.join(neighbor_min, "doc_id", "left")
             .select("doc_id",
                     F.least("component_id", "nbr_min").alias("component_id"),
                     (F.col("nbr_min") < F.col("component_id")).alias("chg"))
-        ).localCheckpoint(eager=True)
-        changed = updated.filter(F.col("chg")).limit(1).count()
-        labels = updated.drop("chg")
-        if changed == 0:
-            break
-    return labels
+        )
+
+    return iterate(
+        labels, propagate, max_iter, checkpoint_every=1,
+        changed=lambda s: s.filter(F.col("chg")).limit(1).count() > 0,
+    ).select("doc_id", "component_id")
 
 
 def connected_components_star(edges: DataFrame, src: str = "doc_a",
@@ -623,19 +621,22 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
         return out.union(out.select(F.col("v").alias("u"),
                                     F.col("u").alias("v"))).distinct()
 
-    e = both
-    prev_count = e.count()
-    for _ in range(max_iter):
-        note_rounds(1)
+    def contract(e: DataFrame, _i: int) -> DataFrame:
         # Per-star materialization is LOAD-BEARING, not just lineage
         # hygiene: star() consumes its input twice (the mins groupBy
         # and the half filter), so an unmaterialized large-star output
         # would replay its whole plan per consumer. Fusing the two
         # stars into one materialized round was measured in round 10
         # (same-session A/B at sf0.1): neutral-to-worse
-        # (dd_survivorship warm 5.5s -> 6.3s) — keep the checkpoint.
-        e = star(e, large=True).localCheckpoint(eager=True)
-        e = star(e, large=False).localCheckpoint(eager=True)
+        # (dd_survivorship warm 5.5s -> 6.3s) — keep the checkpoint
+        # (iterate() takes the small-star one).
+        return star(star(e, large=True).localCheckpoint(eager=True),
+                    large=False)
+
+    prev_count = both.count()
+
+    def changed(e: DataFrame) -> bool:
+        nonlocal prev_count
         n = e.count()
         # converged when the rewrite is a fixpoint: every node already
         # points at its component min, so the edge set is the star
@@ -644,8 +645,12 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
             # one extra confirmation pass guards count collisions
             again = star(star(e, True), False)
             if again.exceptAll(e).limit(1).count() == 0:
-                break
+                return False
         prev_count = n
+        return True
+
+    e = iterate(both, contract, max_iter, checkpoint_every=1,
+                changed=changed)
     labels = (e.groupBy("u")
               .agg(F.least(F.min("v"), F.first("u")).alias("component_id"))
               .select(F.col("u").alias("doc_id"), "component_id"))

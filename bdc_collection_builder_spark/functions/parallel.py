@@ -21,23 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` partitions
-    (default: the session's default parallelism) iff it currently has
-    fewer — one tiny shuffle locally, a no-op on an already-parallel
-    production scan.
-
-    ``$SPARK_GRAFT_SPREAD_TARGET`` overrides the default goal — a
-    measurement knob only (round-11 item 4 swept 4/8/16/32 on the LSH
-    family at 32 cores: flat within noise, so the CPU-spreading
-    default stands; the spread stages are compute-bound and want
-    cores, unlike shuffle sizing which wants bytes)."""
-    import os
-
-    spark = df.sparkSession
-    goal = target or int(os.environ.get(
-        "SPARK_GRAFT_SPREAD_TARGET", "0")) \
-        or spark.sparkContext.defaultParallelism
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to the session's default
+    parallelism iff it currently has fewer partitions — one tiny
+    shuffle locally, a no-op on an already-parallel production scan.
+    The goal is cores, not bytes: the spread stages are compute-bound
+    (a 4/8/16/32-partition sweep on the LSH family at 32 cores was flat
+    within noise)."""
+    goal = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < goal:
         return df.repartition(goal)
     return df

@@ -37,22 +37,6 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
-def ab_tracked_persist(tag: str, df: DataFrame) -> DataFrame:
-    """:func:`tracked_persist` with a measurement escape hatch: when
-    ``tag`` appears in ``$SPARK_GRAFT_AB_NOPERSIST`` (comma-separated)
-    the frame is returned UNPERSISTED. This is the round-11 A/B
-    instrument for persist sites whose local win is in doubt
-    (VERDICT-r10 item 3): one warmed session alternates the env var
-    between runs, so both variants are measured under identical
-    machine conditions. Unset (every production/bench/driver run),
-    it is exactly tracked_persist."""
-    import os
-
-    if tag in os.environ.get("SPARK_GRAFT_AB_NOPERSIST", "").split(","):
-        return df
-    return tracked_persist(df)
-
-
 def drain_tracked() -> int:
     """Unpersist every tracked DataFrame; returns how many."""
     n = 0

@@ -13,13 +13,11 @@ recomputed in DuckDB and hash-checked end-to-end.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bdc_collection_builder_spark.functions.persist import (
-    ab_tracked_persist,
-    tracked_persist,
-)
-from bdc_collection_builder_spark.functions.rounds import note_rounds
+from bdc_collection_builder_spark.functions.iterate import iterate
+from bdc_collection_builder_spark.functions.persist import tracked_persist
 from bdc_collection_builder_spark.plans._util import scratch_dir, t
 from bdc_collection_builder_spark.plans.registry import query
 
@@ -2978,8 +2976,7 @@ def cu_filter_funnel(spark, sf_dir):
     # <=5 rows, corpus-scale producer, consumed by the total AND the
     # output — without the persist the whole funnel pipeline ran twice
     # (round 10; the persist rule: |frame| << producing work).
-    grouped = ab_tracked_persist(
-        "funnel_grouped",
+    grouped = tracked_persist(
         feats.select(stage.alias("stage"))
         .groupBy("stage")
         .agg(F.count("*").cast("bigint").alias("n_docs")))
@@ -4623,7 +4620,8 @@ _NDCG_IDCG = 4.543559338088346
                coalesce(p.dcg, CAST(0 AS DOUBLE)) AS dcg,
                coalesce(p.dcg, CAST(0 AS DOUBLE)) / {_NDCG_IDCG!r}
                    AS ndcg_at_10
-        FROM (SELECT DISTINCT query_id FROM truth) q
+        FROM (SELECT vec_id AS query_id FROM embeddings
+              WHERE vec_id < 8) q
         LEFT JOIN per_q p USING (query_id)
     """,
 )
@@ -4830,8 +4828,10 @@ def exact_substring_stats(docs, carry_text: bool = False):
             F.explode(F.sequence(F.lit(1), F.col("dlen")))
             .alias("off"))
     )
-    for k, lens in _es_round_lengths():
-        note_rounds(1)
+    ladder = _es_round_lengths()
+
+    def lift(pos: DataFrame, i: int) -> DataFrame:
+        k = ladder[i][0]
         # Restrict the static worst-case ladder to lengths some LIVE
         # position will actually probe this round: the probe side only
         # exists to count corpus occurrences of grams the candidate
@@ -4850,7 +4850,7 @@ def exact_substring_stats(docs, carry_text: bool = False):
             r[0] for r in pos.select("l").distinct().collect())
         needed = sorted({l + k for l in live_ls if l + k <= _ES_CAP})
         if not needed:
-            continue
+            return pos
         # corpus-wide duplicated (length, gram) set for this round's
         # needed lengths; text is consumed by substring() in the
         # same narrow stage, only (m, g) pairs reach the groupBy
@@ -4884,11 +4884,13 @@ def exact_substring_stats(docs, carry_text: bool = False):
             cand.join(dups, ["m", "g"], "left_semi")
             .select("doc_id", "off", F.col("m").alias("l2"))
         )
-        pos = (
+        return (
             pos.join(lifted, ["doc_id", "off"], "left")
             .withColumn("l", F.coalesce("l2", "l"))
             .select(*state_cols)
-        ).localCheckpoint(eager=True)
+        )
+
+    pos = iterate(pos, lift, len(ladder), checkpoint_every=1)
     return (
         pos.groupBy("doc_id")
         .agg(F.max("l").cast("bigint").alias("max_dup_len"),

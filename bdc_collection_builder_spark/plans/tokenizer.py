@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.extensions.text import tokens
-from bdc_collection_builder_spark.functions.rounds import note_rounds
+from bdc_collection_builder_spark.functions.iterate import iterate, note_rounds
 from bdc_collection_builder_spark.plans._util import t
 from bdc_collection_builder_spark.plans.registry import query
 
@@ -799,10 +799,9 @@ def tk_bpe_train_rounds(spark, sf_dir):
         tracked_persist,
     )
 
-    seg = tracked_persist(_bpe_initial_segmentation(spark, sf_dir))
     learned = []
-    note_rounds(_BPE_ROUNDS)
-    for r in range(_BPE_ROUNDS):
+
+    def merge_round(seg, r):
         top = (
             _bpe_pair_counts(seg)
             .orderBy(F.col("c").desc(), "s1", "s2").limit(1)
@@ -814,8 +813,13 @@ def tk_bpe_train_rounds(spark, sf_dir):
             F.lit(r + 1).cast("bigint").alias("round"),
             F.concat(F.col("m1"), F.col("m2")).alias("merged_symbol"),
             F.col("c").alias("pair_count")))
-        seg = tracked_persist(
+        return tracked_persist(
             _bpe_apply_merge(seg, top.select("m1", "m2")))
+
+    # checkpoint_every=0: the per-round persists stand in for
+    # truncation, so the jobs stay those of the plain loop
+    iterate(tracked_persist(_bpe_initial_segmentation(spark, sf_dir)),
+            merge_round, _BPE_ROUNDS, checkpoint_every=0)
     out = learned[0]
     for df in learned[1:]:
         out = out.unionByName(df)

@@ -90,9 +90,18 @@ def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],
     # reclaim it and saveAsTable fails with LOCATION_ALREADY_EXISTS,
     # so drop both the catalog entry and any orphaned directory (the
     # same restart-safety pattern as lo_dynamic_partition_pruning).
+    # The catalog knows a live table's location; an orphan sits where
+    # the catalog would put it — under the LOWERCASED name.
+    if spark.catalog.tableExists(table_name):
+        location = next(
+            r.data_type for r in
+            spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
+            if r.col_name == "Location")
+    else:
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        location = f"{wh}/{table_name.lower()}"
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/{table_name}", ignore_errors=True)
+    shutil.rmtree(urlparse(location).path, ignore_errors=True)
     (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, *bucket_cols)

@@ -469,7 +469,8 @@ def main() -> None:
     # still shows the heavy line on quiet runs. A length guard keeps
     # the compact line itself under 1980 chars by trimming the
     # least-noisy noisy_min entries first (the worst spreads are the
-    # medians most in need of a replacement estimator).
+    # medians most in need of a replacement estimator), and raises if
+    # trimming cannot bring it under the budget.
     print(json.dumps(
         {"heavy": {n: round(t, 2) for n, t in heavy.items()}},
         separators=(",", ":")))
@@ -498,6 +499,10 @@ def main() -> None:
         compact["noisy_min"].pop(trim_order.pop(0))
     while _clen() > 1980 and compact.get("census_over5s"):
         compact["census_over5s"].pop()
+    if _clen() > 1980:
+        raise RuntimeError(
+            f"compact bench line is {_clen()} chars after trimming, over "
+            "the 1980-char budget: shorten the queries map")
     print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
 

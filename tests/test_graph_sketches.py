@@ -96,6 +96,95 @@ def test_iterate_checkpoint_matches_unrolled(spark, sf_dir):
     src_deg.unpersist()
 
 
+def _counter_loop(spark, start, cap=None):
+    """A one-row loop x -> x + 1 (optionally saturating at ``cap``),
+    plus a log of the steps run and of the change tests' answers."""
+    from pyspark.sql import functions as F
+
+    log = {"steps": 0, "tests": []}
+
+    def step(state, i):
+        assert i == log["steps"]
+        log["steps"] += 1
+        nxt = F.col("x") + 1
+        return state.select((nxt if cap is None
+                             else F.least(nxt, F.lit(cap))).alias("x"))
+
+    def changed(state):
+        # the change test always sees a freshly checkpointed frame
+        assert state._jdf.queryExecution().logical().toString() \
+            .startswith("LogicalRDD")
+        log["tests"].append(state.first().x < (cap or 1 << 30))
+        return log["tests"][-1]
+
+    return spark.range(1).select(F.lit(start).alias("x")), step, \
+        changed, log
+
+
+def test_iterate_stops_at_first_unchanged_round(spark):
+    from bdc_collection_builder_spark.functions.iterate import (
+        iterate,
+        reset,
+        taken,
+    )
+
+    init, step, changed, log = _counter_loop(spark, 0, cap=3)
+    reset()
+    out = iterate(init, step, 20, checkpoint_every=1, changed=changed)
+    assert out.first().x == 3
+    assert log["tests"] == [True, True, False]
+    assert log["steps"] == taken() == 3
+
+
+def test_iterate_max_rounds_caps_a_loop_that_never_converges(spark):
+    from bdc_collection_builder_spark.functions.iterate import (
+        iterate,
+        reset,
+        taken,
+    )
+
+    init, step, changed, log = _counter_loop(spark, 0)
+    reset()
+    out = iterate(init, step, 4, checkpoint_every=1, changed=changed)
+    assert out.first().x == 4
+    # the capped final round is neither checkpointed nor tested
+    assert log["tests"] == [True] * 3
+    assert log["steps"] == taken() == 4
+
+
+def test_iterate_round_counter_counts_rounds_run(spark):
+    from bdc_collection_builder_spark.functions.iterate import (
+        iterate,
+        reset,
+        taken,
+    )
+
+    reset()
+    init, step, _, _ = _counter_loop(spark, 0)
+    iterate(init, step, 5, checkpoint_every=2)
+    assert taken() == 5
+    init, step, changed, log = _counter_loop(spark, 0, cap=2)
+    iterate(init, step, None, checkpoint_every=1, changed=changed)
+    assert log["steps"] == 2 and taken() == 5 + 2
+    reset()
+    assert taken() == 0
+
+
+def test_iterate_converged_input_runs_one_round(spark):
+    from bdc_collection_builder_spark.functions.iterate import (
+        iterate,
+        reset,
+        taken,
+    )
+
+    init, step, changed, log = _counter_loop(spark, 3, cap=3)
+    reset()
+    out = iterate(init, step, None, checkpoint_every=1, changed=changed)
+    assert out.first().x == 3
+    assert log["tests"] == [False]
+    assert log["steps"] == taken() == 1
+
+
 @pytest.mark.slow  # >8s e2e pin: round-close gate (--runslow)
 def test_hits_scores_utility(spark, sf_dir):
     """Parameterized HITS at depth 4: unit L2 norms each round,

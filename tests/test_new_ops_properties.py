@@ -1511,11 +1511,28 @@ def test_ndcg_qids_on_degenerate_corpus(spark, tmp_path):
     agree whenever every query has at least one candidate (any corpus
     with >= 2 embeddings — every benched SF); on the degenerate
     single-embedding corpus truth is EMPTY and the defined behavior is
-    one zero-score row per query, not zero rows. Pin it."""
+    one zero-score row per query, not zero rows. Pin it, and pin the
+    DuckDB oracle to the same query-id set."""
+    import duckdb
+
+    from bdc_collection_builder_spark.compare import strict_mismatch
+
     emb = spark.createDataFrame(
         [(0, [1.0] * 64, 0)],
         "vec_id long, embedding array<float>, label int")
-    emb.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    out = rows(spark, str(tmp_path), "ss_ndcg_eval")
-    assert [(r.query_id, r.n_hits, float(r.dcg), float(r.ndcg_at_10))
-            for r in out] == [(0, 0, 0.0, 0.0)]
+    path = tmp_path / "embeddings.parquet"
+    emb.write.mode("overwrite").parquet(str(path))
+    got = QUERY_REGISTRY["ss_ndcg_eval"].spark_fn(
+        spark, str(tmp_path)).toPandas()
+    assert [tuple(r) for r in got[["query_id", "n_hits", "dcg",
+                                   "ndcg_at_10"]].itertuples(index=False)] \
+        == [(0, 0, 0.0, 0.0)]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                    f"read_parquet('{path}/*.parquet')")
+        want = con.execute(QUERY_REGISTRY["ss_ndcg_eval"].oracle).fetchdf()
+    finally:
+        con.close()
+    why = strict_mismatch(got, want)
+    assert why is None, why

@@ -211,6 +211,38 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
+def test_write_bucketed_reclaims_orphan_of_mixed_case_name(spark, sf_dir):
+    """An interrupted session can leave a managed table's directory
+    behind with no catalog entry. Spark stores managed tables under
+    the LOWERCASED name, so a mixed-case table name must clean up the
+    lowercase directory, or saveAsTable fails with
+    LOCATION_ALREADY_EXISTS."""
+    import os
+    from urllib.parse import urlparse
+
+    from bdc_collection_builder_spark.sources.tables import (
+        load_table,
+        write_bucketed,
+    )
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice")
+    name = "B_Orphan_Orders"
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    orphan = os.path.join(wh, name.lower())
+    os.makedirs(orphan, exist_ok=True)
+    open(os.path.join(orphan, "part-00000.parquet"), "w").close()
+    try:
+        write_bucketed(orders, name, ["o_orderkey"], n_buckets=4)
+        # and again over the live table, whose location the catalog
+        # reports
+        write_bucketed(orders, name, ["o_orderkey"], n_buckets=4)
+        assert spark.table(name).count() == orders.count()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_scrub_and_quantize_are_shuffle_free(spark, sf_dir):
     for name in ("tx_pii_scrub", "ss_quantize_int8"):
         plan = plan_of(spark, name, sf_dir)
@@ -671,9 +703,10 @@ def test_planmap_rounds_column_explicit(tmp_path):
     blanks = [n for n, r in rounds.items() if not r.isdigit()]
     assert not blanks, f"non-integer rounds cells: {blanks[:10]}"
 
-    # queries that call note_rounds-instrumented helpers (iterate(),
-    # BPE/Viterbi-EM training, connected-components star contraction,
-    # label propagation). dd_exact_substring_maxlen left this set in
+    # queries whose construction runs iterate() loops (relaxations,
+    # BPE training, connected-components star contraction, label
+    # propagation, SCC frontiers) or notes its one eager pass
+    # (Viterbi-EM). dd_exact_substring_maxlen left this set in
     # round 8: its registered engine is now the ONE-PASS sorted-
     # neighbor-LCP path (rounds=0 is correct); the binary-lifting
     # engine it replaced stays covered by its equivalence test.

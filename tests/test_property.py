@@ -7,9 +7,11 @@ output clamps to the dtype range, masked results fill with nodata.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from bdc_collection_builder_spark.functions.expression import (
@@ -42,11 +44,17 @@ def expressions(draw, depth=2):
 def numpy_reference(expr: str, b04: np.ma.MaskedArray,
                     b08: np.ma.MaskedArray, scale: float) -> np.ndarray:
     """The reference's evaluator: numpy.ma arithmetic (invalid ops and
-    zero-division mask), int16 clamp, nodata fill."""
+    zero-division mask), int16 clamp, nodata fill. Constants are
+    evaluated as band-shaped masked arrays too, so a constant
+    subexpression that divides by zero (``c / (c - c)``) masks like a
+    band expression would, instead of raising in Python float
+    arithmetic."""
+    expr = re.sub(r"\d+\.\d+", lambda m: f"K({m.group(0)})", expr)
     with np.errstate(all="ignore"):
         result = eval(  # noqa: S307 - test-only, generated input
             expr, {"__builtins__": {}},
-            {"B04": b04, "B08": b08, "abs": np.ma.abs})
+            {"B04": b04, "B08": b08, "abs": np.ma.abs,
+             "K": lambda v: np.ma.masked_array(np.full(b04.shape, v))})
         if not isinstance(result, np.ma.MaskedArray):
             result = np.ma.masked_array(
                 np.broadcast_to(np.asarray(result, dtype=np.float64),
@@ -59,6 +67,8 @@ def numpy_reference(expr: str, b04: np.ma.MaskedArray,
 
 @settings(max_examples=25, deadline=None)
 @given(expressions())
+@example(expr="((2.0000 + 2.0000) / (2.0000 - 2.0000))")
+@example(expr="(B04 / ((2.0000 + 2.0000) / (2.0000 - 2.0000)))")
 def test_expression_compiler_matches_numpy_reference(shared_spark, expr):
     rng = np.random.default_rng(7)
     n = 64
