@@ -7,7 +7,7 @@ control flow of the reference. Download has a REAL wire path
 (:func:`http_download_stage` — genuine HTTP with failover + checksum
 validation; loopback fixture providers in the sandbox, real endpoints
 in production) alongside the deterministic simulator
-(`io_simulate=True`); the processor stage likewise has a real
+(:func:`download_stage`); the processor stage likewise has a real
 child-process path (:func:`subprocess_correction_stage` — actual spawn
 + exit-code-driven version fallback; a local fixture install here, the
 Docker/Singularity argv in production). The Spark-side plumbing
@@ -49,8 +49,7 @@ DOWNLOAD_SCHEMA = (
 # the DuckDB oracles in plans/sources.py decode the same digests.
 
 
-def download_stage(scenes: DataFrame, provider_names: list[str],
-                   io_simulate: bool = True) -> DataFrame:
+def download_stage(scenes: DataFrame, provider_names: list[str]) -> DataFrame:
     """S2/S3 — download with provider-priority failover. The ordered
     provider list (J3 query result, collected — it is dimension-sized)
     is closed over by the UDF; each scene tries providers in order,
@@ -61,11 +60,6 @@ def download_stage(scenes: DataFrame, provider_names: list[str],
     handful of catalog-search result files, and an IO-bound stage
     running on one partition would serialize the whole fleet (at 100 TB
     the partition count bounds concurrent provider connections)."""
-    if not io_simulate:
-        raise NotImplementedError(
-            "real provider IO requires network credentials; run with "
-            "io_simulate=True or plug a downloader into this stage")
-
     # The simulator's md5 oracle (offline? per provider + checksum) is
     # computed JVM-side in whole-stage codegen — identical values to
     # hashlib (_simulated_offline), since conv(substr(md5(x),1,2),16,10)
@@ -125,20 +119,13 @@ PROCESSOR_VERSIONS = {"sen2cor": ["2.11.0", "2.10.0", "2.5.5"],
                       "lasrc": ["2.0.1"]}
 
 
-def correction_stage(downloaded: DataFrame, collections: DataFrame,
-                     io_simulate: bool = True) -> DataFrame:
+def correction_stage(downloaded: DataFrame,
+                     collections: DataFrame) -> DataFrame:
     """Z2 — external black-box processor stage. Processor comes from the
     collection metadata (tasks.py:259-260); the UDF walks the version
     fallback list like processor.py:27-101 walks Sen2Cor installs. The
     collections dimension is broadcast-joined — the scene side never
     shuffles."""
-    if not io_simulate:
-        raise NotImplementedError(
-            "for real containerized processors use "
-            "docker_correction_stage (the reference's `docker run` "
-            "boundary with timeout + stop cleanup, tested against a "
-            "PATH shim) or subprocess_correction_stage (plain argv)")
-
     with_proc = downloaded.filter(F.col("status") == "SUCCESS").join(
         F.broadcast(collections.select(
             F.col("id").alias("collection_id"),
@@ -191,8 +178,7 @@ FUSED_SCHEMA = (
 
 
 def download_correction_stage(scenes: DataFrame, provider_names: list[str],
-                              collections: DataFrame,
-                              io_simulate: bool = True) -> DataFrame:
+                              collections: DataFrame) -> DataFrame:
     """Fused download + correction (S2/S3 + Z2) in ONE ``mapInPandas``
     pass — the chained form pays two Arrow serialization boundaries per
     scene batch (JVM→Python→JVM→Python→JVM) and the boundary, not the
@@ -208,11 +194,6 @@ def download_correction_stage(scenes: DataFrame, provider_names: list[str],
     tests/test_pipeline.py::test_fused_stage_matches_chained). On a
     real deployment the same fusion holds: one Python worker holds the
     scene batch across download and subprocess exec, halving IPC."""
-    if not io_simulate:
-        raise NotImplementedError(
-            "real provider IO requires network credentials; run with "
-            "io_simulate=True or plug a downloader into this stage")
-
     n_prov = len(provider_names)
     off_flags = [
         (F.conv(F.substring(

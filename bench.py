@@ -4,16 +4,24 @@
 
 Each query is fully materialized through the ``noop`` sink so Catalyst
 cannot prune the measured work (a bare count() would skip computed
-columns). First query includes JVM/codegen warmup; a warmup pass runs a
-trivial scan first so per-query numbers are comparable.
+columns). A warmup pass runs first so per-query numbers are comparable.
+
+``python bench.py --queries a,b`` times only the named queries
+(``$SPARK_GRAFT_BENCH_RUNS`` runs each, default 5) and prints one JSON
+line per query: wall median/min/max, the median construction time and
+the eager/total Spark job counts (see :func:`run_query`). It writes no
+BENCH_FULL.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -181,7 +189,6 @@ HEAVY_QUERIES = [
                                   # winnow + corpus print join
 ]
 
-# Census triage reasons (see CENSUS_TRIAGED contract above).
 _BLOB_TRIAGE = (
     "constant-size synthetic raster (4 scenes x 16x16 px, "
     "SF-independent): the ~5-6s wall is star-contraction round "
@@ -194,13 +201,14 @@ _BLOB_TRIAGE = (
 # Census triage (VERDICT-r9 task 3): every registered query gets ONE
 # warm run per round (see the census block in main); any census entry
 # over 5s must either be promoted into BENCH_HEAVY or recorded here
-# with a reason, or the round-close checklist fails
+# as (floor_s, reason), or the round-close checklist fails
 # (tests/test_artifacts.py::test_census_has_no_untriaged_tail reads
 # the committed BENCH_FULL.json). Reasons must explain why the cost
-# is the workload, not a plan defect.
-CENSUS_TRIAGED: dict[str, str] = {
-    "px_blob_labeling": _BLOB_TRIAGE,
-    "st_stream_stream_join": (
+# is the workload, not a plan defect; the floor is the quiet-day wall
+# the reason quotes, and census_flagged() trips at twice it.
+CENSUS_TRIAGED: dict[str, tuple[float, str]] = {
+    "px_blob_labeling": (5.0, _BLOB_TRIAGE),
+    "st_stream_stream_join": (3.1, (
         "watermarked stream-stream drain: the wall is a scenario-fixed "
         "number of micro-batch trigger cycles x state-store commits "
         "(state is min-watermark-bounded; the trigger count does not "
@@ -208,40 +216,106 @@ CENSUS_TRIAGED: dict[str, str] = {
         "the round-10 degraded closing machine, crossing 5s only in "
         "single contended samples — micro-batch machinery, not a plan "
         "defect (the drain class is documented as left-alone in "
-        "OPTIMIZATION_r10.md)."),
-    "s02_download_failover": (
+        "OPTIMIZATION_r10.md).")),
+    "s02_download_failover": (2.3, (
         "real-wire HTTP download failover against the loopback "
         "provider: the wall is socket I/O + provider retry/backoff "
         "stage machinery, not Spark plan shape. Warm median 2.3-2.5s "
         "(measured round 10); census one-offs up to ~17s reflect "
         "retry-timeout bursts under machine contention — "
-        "SF-independent stage cost, documented as left-alone."),
+        "SF-independent stage cost, documented as left-alone.")),
 }
+
+
+def census_flagged(name: str, seconds: float) -> bool:
+    """The census gate: a sample over 5s trips it when the query is
+    untriaged or when it is over twice its triaged floor."""
+    if seconds <= 5.0:
+        return False
+    triage = CENSUS_TRIAGED.get(name)
+    return triage is None or seconds > 2 * triage[0]
 
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    from bdc_collection_builder_spark.plans.registry import QUERY_REGISTRY, all_queries
-    from bdc_collection_builder_spark.session import get_spark
+def _warm(spark, sf_dir: str) -> None:
+    """Touch every table so codegen/classloading noise stays out of the
+    first measured query, and run one tiny mapInPandas so the Python
+    workers are forked before any measured UDF stage (a cold spawn of
+    local[N] workers costs seconds and is one-time)."""
     from bdc_collection_builder_spark.sources.tables import TABLES, load_table
 
-    all_queries()
-    spark = get_spark("bench")
-
-    # Warmup: touch every table so codegen/classloading noise stays out
-    # of the first measured query, and run one tiny mapInPandas so the
-    # Python workers are forked+reused before any measured UDF stage
-    # (cold spawn of local[N] workers costs seconds and is one-time).
     for name in TABLES:
         load_table(spark, sf_dir, name).limit(1).collect()
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
+    materialize(spark.range(256).repartition(32).mapInPandas(
+        lambda it: it, "id long"))
+
+
+def run_query(spark, name: str, sf_dir: str) -> tuple[float, float, int, int]:
+    """One cold run of registered query ``name`` through the noop sink,
+    under its own Spark job group. Returns ``(construct_s, wall_s,
+    eager_jobs, jobs)``: ``construct_s`` is building the DataFrame,
+    including every eager barrier (localCheckpoint/count rounds) it
+    runs; ``wall_s`` is construction plus the sink; ``eager_jobs`` and
+    ``jobs`` count the group's Spark jobs before and after the sink.
+    Jobs a streaming query runs on its own execution thread carry that
+    query's group and are not counted. The cache is cleared afterwards
+    so no later run is served from this run's persisted blocks."""
+    from bdc_collection_builder_spark.plans.registry import QUERY_REGISTRY
+
+    sc = spark.sparkContext
+    group = f"bench:{name}:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    tracker = sc.statusTracker()
+    start = time.perf_counter()
+    df = QUERY_REGISTRY[name].spark_fn(spark, sf_dir)
+    construct_s = time.perf_counter() - start
+    eager_jobs = len(tracker.getJobIdsForGroup(group))
+    start = time.perf_counter()
+    materialize(df)
+    wall_s = construct_s + time.perf_counter() - start
+    jobs = len(tracker.getJobIdsForGroup(group))
+    spark.catalog.clearCache()
+    return construct_s, wall_s, eager_jobs, jobs
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Run the benchmark suite, or time only named queries.")
+    parser.add_argument(
+        "--queries", help="comma-separated registered query names: time "
+        "only these and print one JSON line per query")
+    args = parser.parse_args(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+    from bdc_collection_builder_spark.plans.registry import QUERY_REGISTRY, all_queries
+    from bdc_collection_builder_spark.session import get_spark
+
+    all_queries()
+    names = args.queries.split(",") if args.queries else []
+    unknown = [n for n in names if n not in QUERY_REGISTRY]
+    if unknown:
+        parser.error(f"unknown queries: {','.join(unknown)}")
+    spark = get_spark("bench")
+    _warm(spark, sf_dir)
+    if names:
+        for name in names:
+            runs = [run_query(spark, name, sf_dir) for _ in range(n_runs)]
+            walls = sorted(r[1] for r in runs)
+            print(json.dumps({
+                "query": name,
+                "median": round(statistics.median(walls), 3),
+                "min": round(walls[0], 3),
+                "max": round(walls[-1], 3),
+                "construct_s": round(statistics.median(r[0] for r in runs), 3),
+                "eager_jobs": statistics.median(r[2] for r in runs),
+                "jobs": statistics.median(r[3] for r in runs),
+            }))
+        spark.stop()
+        return
 
     # Median-of-N per query (VERDICT-r3: best-of-2 let unchanged plans
     # bounce ±25% round-to-round — dd_minhash 2.06→1.37→1.74s — so the
@@ -257,24 +331,12 @@ def main() -> None:
     # where run 2 was cache-warm, so r3→r4 deltas on those queries
     # (e.g. gr_hits ~1.3→~2.3s) are the estimator change, not a plan
     # regression — plan fingerprints in PLANMAP.md are unchanged.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     times: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
     for name in BENCH_QUERIES:
-        fn = QUERY_REGISTRY[name].spark_fn
-        samples = []
-        for _ in range(n_runs):
-            start = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - start)
-            # Queries that persist() intermediates (dedup paths) would
-            # otherwise serve later runs from cache.
-            spark.catalog.clearCache()
-        samples.sort()
-        mid = len(samples) // 2
-        median = (samples[mid] if len(samples) % 2
-                  else (samples[mid - 1] + samples[mid]) / 2)
-        times[name] = round(median, 3)
+        samples = sorted(run_query(spark, name, sf_dir)[1]
+                         for _ in range(n_runs))
+        times[name] = round(statistics.median(samples), 3)
         spread[name] = {"min": round(samples[0], 3),
                         "max": round(samples[-1], 3)}
 
@@ -284,9 +346,7 @@ def main() -> None:
     # Re-warm the Python workers first: the JVM-only query block above
     # can outlive their idle reaper, and a cold respawn would bill ~3s
     # of fork cost to whichever proxy runs first.
-    spark.range(256).repartition(32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
+    _warm(spark, sf_dir)
     for key, proxy in [
         ("proxy_px_expression_2m", lambda: _px_expression_proxy(spark)),
         ("proxy_pipeline_scenes", lambda: _pipeline_proxy(spark, sf_dir)),
@@ -296,13 +356,8 @@ def main() -> None:
         times[key] = samples[1]  # median of 3
         spread[key] = {"min": samples[0], "max": samples[-1]}
 
-    heavy: dict[str, float] = {}
-    for name in HEAVY_QUERIES:
-        fn = QUERY_REGISTRY[name].spark_fn
-        start = time.perf_counter()
-        materialize(fn(spark, sf_dir))
-        heavy[name] = round(time.perf_counter() - start, 3)
-        spark.catalog.clearCache()
+    heavy = {name: round(run_query(spark, name, sf_dir)[1], 3)
+             for name in HEAVY_QUERIES}
 
     # Census (VERDICT-r9 task 3): ONE warm run of every registered
     # query not already measured above, registry order, cache cleared
@@ -310,45 +365,34 @@ def main() -> None:
     # — tj_resample_interpolate sat at ~7s for rounds without anyone
     # noticing because only suite/heavy members were ever timed. The
     # census is NOT round-over-round comparable (single run, no
-    # median); it feeds exactly one signal: the untriaged->5s gate
+    # median); it feeds exactly one signal: the census_flagged() gate
     # below. The five store-seam queries (s27/s33-s36) stay out of
     # the SUITE because their module-level outcome caches make only
     # the first in-process invocation measure the engine — but the
     # census IS a single first invocation, so their numbers here are
     # honest build costs.
-    census: dict[str, float] = {}
+    measured = set(times) | set(heavy)
+    census = {name: round(run_query(spark, name, sf_dir)[1], 3)
+              for name in QUERY_REGISTRY if name not in measured}
+    # Measurement fix (round 10, documented in OPTIMIZATION_r10.md):
+    # a census entry is ONE sample, so a contention burst on this
+    # machine (storms measured at 10-40x on otherwise sub-2s
+    # queries) can push any query past the gate for one round —
+    # the round-10 closing runs tripped three DIFFERENT quiet-day
+    # sub-3s queries across consecutive runs. A flagged sample gets
+    # exactly one confirmation run and keeps the MIN: a storm
+    # sample does not reproduce, a genuine tail does. The first
+    # sample is preserved in the artifact via census_retried.
     census_retried: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_CENSUS", "1") != "0":
-        measured = set(times) | set(heavy)
-        for name in QUERY_REGISTRY:
-            if name in measured:
-                continue
-            fn = QUERY_REGISTRY[name].spark_fn
-            start = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            census[name] = round(time.perf_counter() - start, 3)
-            spark.catalog.clearCache()
-        # Measurement fix (round 10, documented in OPTIMIZATION_r10.md):
-        # a census entry is ONE sample, so a contention burst on this
-        # machine (storms measured at 10-40x on otherwise sub-2s
-        # queries) can push any query past the 5s gate for one round —
-        # the round-10 closing runs tripped three DIFFERENT quiet-day
-        # sub-3s queries across consecutive runs. A >5s sample now gets
-        # exactly one confirmation run and keeps the MIN: a storm
-        # sample does not reproduce, a genuine tail does. The gate's
-        # purpose (catch unknown reproducible tails) is unchanged; the
-        # first sample is preserved in the artifact via census_retried.
-        for name, t0 in list(census.items()):
-            if t0 > 5.0 and name not in CENSUS_TRIAGED:
-                fn = QUERY_REGISTRY[name].spark_fn
-                start = time.perf_counter()
-                materialize(fn(spark, sf_dir))
-                again = round(time.perf_counter() - start, 3)
-                spark.catalog.clearCache()
-                census_retried[name] = t0
-                census[name] = min(t0, again)
-    census_over5s = sorted(
-        n for n, t in census.items() if t > 5.0 and n not in CENSUS_TRIAGED)
+    for name, first in list(census.items()):
+        if census_flagged(name, first):
+            census_retried[name] = first
+            census[name] = min(
+                first, round(run_query(spark, name, sf_dir)[1], 3))
+    # the key name predates the triage floors: it lists every entry
+    # the gate still flags after its confirmation run
+    census_over5s = sorted(n for n, t in census.items()
+                           if census_flagged(n, t))
 
     total = round(sum(times.values()), 3)
     # Contention self-report (VERDICT-r6 What's-wrong #1): round 6's

@@ -25,15 +25,13 @@ import sys
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-
 
 def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
     from bdc_collection_builder_spark.compare import strict_mismatch
+    from bdc_collection_builder_spark.sources.tables import TABLES
 
     import __spark_entry__ as mod
 

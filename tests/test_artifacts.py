@@ -44,9 +44,11 @@ def test_bench_suite_membership_consistent():
     assert not set(suite) & set(heavy)
     assert not set(triaged) & set(heavy)
     assert not set(triaged) & set(suite)
-    for name, reason in triaged.items():
+    for name, (floor_s, reason) in triaged.items():
         assert isinstance(reason, str) and len(reason) >= 20, (
             f"census triage for {name} needs a real reason, not a stub")
+        assert 0 < floor_s <= 5.0, (
+            f"census triage for {name} needs its quiet-day floor in s")
 
 
 def test_census_has_no_untriaged_tail():
