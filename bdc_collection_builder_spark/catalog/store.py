@@ -70,92 +70,14 @@ class ConstraintViolation(RuntimeError):
     providers, 06fab6583881_activities.py:27-48)."""
 
 
-class PointerCASBackend:
-    """Strategy for the one primitive the whole commit protocol rests
-    on: atomically flip a table's ``_CURRENT`` pointer iff it still
-    equals the writer's snapshot.  On a local/NFS filesystem that is a
-    flock'd read-compare-replace (:class:`FlockCAS`, the default).  On
-    an object store there is no flock — S3/GCS/ABFS instead offer a
-    conditional PUT (S3 ``If-Match`` ETag / ``If-None-Match``, GCS
-    ``if-generation-match``, ABFS ETag), which is exactly this
-    interface (:class:`ConditionalPutCAS`).  Everything above the flip
-    (MVCC generations, staging, vacuum pins, OCC retry) is
-    backend-agnostic, so the 100 TB object-store deployment swaps ONE
-    seam instead of the store."""
-
-    def flip(self, store: "CatalogStore", table: str, gen: str,
-             expected) -> None:
-        """Point ``table``'s pointer at ``gen``.  With ``expected`` set
-        (a generation id, or None meaning pointer-must-not-exist) the
-        flip must be atomic compare-and-swap, raising
-        :class:`CommitConflict` and changing nothing on mismatch."""
-        raise NotImplementedError
-
-
-class FlockCAS(PointerCASBackend):
-    """Local-filesystem CAS: read-compare-``os.replace`` under a
-    per-table advisory flock (cross-process and cross-thread)."""
-
-    def flip(self, store, table, gen, expected) -> None:
-        with store._pointer_lock(table):
-            if expected is not _UNCONDITIONAL \
-                    and store._current_gen(table) != expected:
-                raise CommitConflict(
-                    f"{table}: generation moved from {expected!r} to "
-                    f"{store._current_gen(table)!r} during commit")
-            store._replace_pointer(table, gen)
-
-
-class ConditionalPutCAS(PointerCASBackend):
-    """Object-store CAS: one conditional PUT of the pointer object.
-
-    ``put_if_match(pointer_path, expected, new) -> bool`` is the seam
-    the real store provides — return True iff the object was written
-    because its current content matched ``expected`` (None = object
-    must not exist).  An S3 adapter implements it as
-    ``PUT ... If-Match: <etag-of-expected>`` (or ``If-None-Match: *``),
-    GCS as ``if_generation_match``.  Without an adapter a local
-    emulation (flock'd, same visible semantics) is used so the
-    contention tests can exercise THIS code path end-to-end.
-
-    Unconditional flips (``overwrite``) degrade to a plain PUT."""
-
-    def __init__(self, put_if_match=None):
-        self._put = put_if_match
-
-    def flip(self, store, table, gen, expected) -> None:
-        put = self._put or (
-            lambda path, exp, new: self._local_put_if_match(
-                store, table, exp, new))
-        if expected is _UNCONDITIONAL:
-            # plain PUT — last-writer-wins by contract
-            with store._pointer_lock(table):
-                store._replace_pointer(table, gen)
-            return
-        if not put(store._pointer(table), expected, gen):
-            raise CommitConflict(
-                f"{table}: conditional PUT of pointer -> {gen!r} "
-                f"rejected (expected base {expected!r} moved)")
-
-    @staticmethod
-    def _local_put_if_match(store, table, expected, new) -> bool:
-        with store._pointer_lock(table):
-            if store._current_gen(table) != expected:
-                return False
-            store._replace_pointer(table, new)
-            return True
-
-
 class CatalogStore:
     """A directory of parquet tables with typed schemas and upsert."""
 
     def __init__(self, spark: SparkSession, root: str,
-                 keep_generations: int = _KEEP_GENERATIONS,
-                 cas_backend: PointerCASBackend | None = None):
+                 keep_generations: int = _KEEP_GENERATIONS):
         self.spark = spark
         self.root = root
         self.keep_generations = keep_generations
-        self.cas_backend = cas_backend or FlockCAS()
         #: table -> {generation: refcount} of generations _vacuum must
         #: not collect: staged-but-uncommitted generations of OPEN
         #: transactions, and the pinned BASE snapshots of in-flight CAS
@@ -208,12 +130,13 @@ class CatalogStore:
                 return StructType.fromJson(_json.load(fh))
         return SCHEMAS[table]
 
-    def read(self, table: str) -> DataFrame:
-        gen = self._current_gen(table)
-        if gen is None:
-            return self.spark.createDataFrame([], SCHEMAS[table])
+    def _read_gen(self, table: str, gen: str) -> DataFrame:
+        """Scan one generation directory under its versioned schema."""
         return self.spark.read.schema(self._gen_schema(table, gen)).parquet(
             os.path.join(self.path(table), gen))
+
+    def read(self, table: str) -> DataFrame:
+        return self._read_pinned(table, self._current_gen(table))
 
     def snapshots(self, table: str) -> list[str]:
         """Retained generation ids, oldest first (current is last
@@ -236,8 +159,7 @@ class CatalogStore:
         exactly like snapshot-expiry in the table formats."""
         if gen not in self.snapshots(table):
             raise KeyError(f"{table}: generation {gen!r} expired or unknown")
-        return self.spark.read.schema(self._gen_schema(table, gen)).parquet(
-            os.path.join(self.path(table), gen))
+        return self._read_gen(table, gen)
 
     def optimize(self, table: str, target_bytes: int = 128 * 1024 * 1024,
                  zorder_by: list[str] | None = None) -> str:
@@ -325,8 +247,7 @@ class CatalogStore:
         half-old/half-new."""
         if gen is None:
             return self.spark.createDataFrame([], SCHEMAS[table])
-        return self.spark.read.schema(self._gen_schema(table, gen)).parquet(
-            os.path.join(self.path(table), gen))
+        return self._read_gen(table, gen)
 
     def _cas_commit(self, table: str, build, retries: int = 3,
                     keep_extra: bool = False) -> None:
@@ -889,8 +810,7 @@ class CatalogStore:
         if not self.constraints(table) and not self._referencing(table):
             return
         resolve = resolve or self.read
-        staged = self.spark.read.schema(self._gen_schema(table, gen)) \
-            .parquet(os.path.join(self.path(table), gen))
+        staged = self._read_gen(table, gen)
         msgs = self._violations(table, staged, resolve)
         msgs += self._reverse_violations(table, staged, resolve)
         if msgs:
@@ -1018,10 +938,15 @@ class CatalogStore:
         since the caller snapshotted it, the flip raises
         :class:`CommitConflict` and changes nothing — Delta-style
         optimistic concurrency. The default is an unconditional
-        last-writer-wins flip (overwrite semantics). The atomic
-        primitive itself is the injected :class:`PointerCASBackend`
-        (flock locally, conditional PUT on object stores)."""
-        self.cas_backend.flip(self, table, gen, expected)
+        last-writer-wins flip (overwrite semantics). The check and the
+        replace run under the table's :meth:`_pointer_lock`."""
+        with self._pointer_lock(table):
+            if expected is not _UNCONDITIONAL \
+                    and self._current_gen(table) != expected:
+                raise CommitConflict(
+                    f"{table}: generation moved from {expected!r} to "
+                    f"{self._current_gen(table)!r} during commit")
+            self._replace_pointer(table, gen)
         self._vacuum(table, keep=gen)
 
     def _replace_pointer(self, table: str, gen: str) -> None:
@@ -1161,9 +1086,9 @@ class Transaction:
     commit. Exceptions abort: staged generation directories are
     removed, pointers never moved.
 
-    Backend note: single-table writers are fully CAS-backend-agnostic
-    (flock or conditional PUT), but MULTI-table atomicity here rests
-    on holding every touched table's advisory pointer lock across
+    Backend note: single-table writers compare-and-swap one pointer
+    under a per-table advisory flock; MULTI-table atomicity here rests
+    on holding every touched table's pointer lock across
     validate→intent→flips — a primitive object stores don't offer. An
     object-store deployment gets multi-table transactions from a
     catalog service holding ONE pointer for the table set (the
@@ -1368,9 +1293,8 @@ class PartitionedCatalogStore(CatalogStore):
     """
 
     def __init__(self, spark: SparkSession, root: str,
-                 partition_cols: dict[str, str] | None = None,
-                 cas_backend: PointerCASBackend | None = None):
-        super().__init__(spark, root, cas_backend=cas_backend)
+                 partition_cols: dict[str, str] | None = None):
+        super().__init__(spark, root)
         #: table -> partition column (defaults to collection_id where present)
         self.partition_cols = partition_cols or {
             t: "collection_id"
@@ -1423,7 +1347,6 @@ class PartitionedCatalogStore(CatalogStore):
         sub._protected = {}
         sub._pin_files = {}
         sub._protect_mutex = self._protect_mutex
-        sub.cas_backend = self.cas_backend
         os.makedirs(sub.root, exist_ok=True)
         return sub
 

@@ -5,24 +5,24 @@ reference entry point (views.py routes / RadcorBusiness methods,
 SURVEY §3), so a user of the reference can switch by calling the same
 operations on DataFrames instead of HTTP:
 
-| reference                                   | engine method |
-|---------------------------------------------|---------------|
-| POST /api/radcor (action=preview)           | ``radcor_preview`` |
-| POST /api/radcor (action=start)             | ``radcor_start`` |
-| GET  /api/activities (paginated)            | ``list_activities`` |
-| GET  /api/utils/count-activities            | ``count_activities`` |
-| GET  /api/utils/count-activities-date       | ``count_activities_with_date`` |
-| GET  /api/utils/count-tasks                 | ``count_failed_activities`` |
-| POST /api/check-scenes                      | ``check_scenes`` |
-| GET  /api/utils/collections                 | ``list_collections`` |
-| GET  /api/utils/collections/<id>/tiles      | ``list_collection_tiles`` |
-| GET  /api/utils/providers                   | ``list_providers`` |
-| POST /api/restart                           | ``restart_activities`` |
-| GET  /api/stats/active                      | ``stats_active`` |
-| GET  /api/stats/pending                     | ``stats_pending`` |
-| GET  /api/utils/collections-available       | ``collections_available`` |
-| GET  /api/grids[/<id>]                      | ``list_grids`` |
-| (worker chain download→…→post)              | ``run_pipeline`` |
+| reference                                        | engine method |
+|--------------------------------------------------|---------------|
+| POST /api/radcor (action=preview)                | ``radcor_preview`` |
+| POST /api/radcor (action=start)                  | ``radcor_start`` |
+| GET  /api/activities (paginated)                 | ``list_activities`` |
+| GET  /api/utils/count-activities                 | ``count_activities`` |
+| GET  /api/utils/count-activities-date            | ``count_activities_with_date`` |
+| GET  /api/utils/count-unsuccessfully-activities  | ``count_failed_activities`` |
+| POST /api/check-scenes                           | ``check_scenes`` |
+| GET  /api/collections                            | ``list_collections`` |
+| GET  /api/collections/<id>/tiles                 | ``list_collection_tiles`` |
+| GET  /api/providers                              | ``list_providers`` |
+| GET/POST /api/radcor/restart                     | ``restart_activities`` |
+| GET  /api/stats/active                           | ``stats_active`` |
+| GET  /api/stats/pending                          | ``stats_pending`` |
+| GET  /api/utils/collections-available            | ``collections_available`` |
+| GET  /api/grids[/<id>]                           | ``list_grids`` |
+| (worker chain download→…→post)                   | ``run_pipeline`` |
 
 All methods return DataFrames (the caller decides when to collect);
 nothing in the façade materializes data on the driver.
@@ -32,19 +32,19 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.catalog.store import CatalogStore
 from bdc_collection_builder_spark.operators.joins import provider_order
-from bdc_collection_builder_spark.operators.windows import (
-    latest_per_group,
-    paginate,
-)
+from bdc_collection_builder_spark.operators.windows import paginate
 from bdc_collection_builder_spark.pipeline import radcor as _radcor
 from bdc_collection_builder_spark.pipeline.ledger import (
+    activities,
+    attempts,
     due_retries,
     failed_latest,
+    latest_attempts,
 )
 from bdc_collection_builder_spark.pipeline.radcor import RadcorQuery
 from bdc_collection_builder_spark.pipeline.stages import (
@@ -84,17 +84,11 @@ class CollectionBuilderEngine:
         """F5 filters + W1 latest-execution join, unpaginated — shared
         by ``list_activities`` and the web layer's ``total`` count so
         both always apply identical predicates."""
-        acts = self.store.read("activities")
-        if collection_id is not None:
-            acts = acts.filter(F.col("collection_id") == collection_id)
-        if activity_type_contains:
-            acts = acts.filter(
-                F.col("activity_type").contains(activity_type_contains))
-        hist = latest_per_group(
-            self.store.read("activity_history"), ["activity_id"], "start")
-        return acts.join(
-            hist.select("activity_id", F.col("start").alias("last_execution")),
-            acts["id"] == F.col("activity_id"), "left").drop("activity_id")
+        acts = activities(self.store, collection_id, activity_type_contains)
+        last = (self.store.read("activity_history").groupBy("activity_id")
+                .agg(F.max("start").alias("last_execution")))
+        return acts.join(last, acts["id"] == last["activity_id"],
+                         "left").drop("activity_id")
 
     def list_activities(self, page: int = 1, per_page: int = 10,
                         collection_id: int | None = None,
@@ -109,9 +103,12 @@ class CollectionBuilderEngine:
                          last_date: str | None = None,
                          collection: int | None = None,
                          type_contains: str | None = None) -> DataFrame:
-        return _radcor.count_activities(
-            self.store, start_date=start_date, last_date=last_date,
-            collection=collection, type_contains=type_contains)
+        """A1 — per-status histogram of attempts (controller.py:426-446)."""
+        return (
+            attempts(self.store, start_date, last_date, collection,
+                     type_contains)
+            .groupBy("status").agg(F.count("*").alias("n"))
+        )
 
     def count_activities_with_date(self, start_date: str | None = None,
                                    last_date: str | None = None,
@@ -120,27 +117,9 @@ class CollectionBuilderEngine:
                                    ) -> DataFrame:
         """A2 — per-day per-status histogram, same optional filters as
         the reference (controller.py:448-470)."""
-        hist = self.store.read("activity_history")
-        tasks = self.store.read("tasks")
-        if start_date:
-            hist = hist.filter(
-                F.col("start") >= F.lit(f"{start_date} 00:00:00"))
-        if last_date:
-            hist = hist.filter(
-                F.col("start") <= F.lit(f"{last_date} 23:59:00"))
-        joined = hist.join(tasks, hist["task_id"] == tasks["id"])
-        if collection is not None or type_contains:
-            acts = self.store.read("activities")
-            if collection is not None:
-                acts = acts.filter(F.col("collection_id") == collection)
-            if type_contains:
-                acts = acts.filter(
-                    F.col("activity_type").contains(type_contains))
-            joined = joined.join(
-                acts.select(F.col("id").alias("activity_id")), "activity_id",
-                "left_semi")
         return (
-            joined
+            attempts(self.store, start_date, last_date, collection,
+                     type_contains)
             .groupBy(F.to_date("start").alias("date"), "status")
             .agg(F.count("*").alias("n"))
             .orderBy("date")
@@ -161,25 +140,9 @@ class CollectionBuilderEngine:
     def stats_pending(self) -> DataFrame:
         """GET /stats/pending (views.py:137-140, celery/utils.py:34-38):
         scenes queued for another attempt — the LATEST attempt per
-        activity is non-terminal. Same single ranking window as
-        failed_latest, different terminal-state predicate."""
-        hist = self.store.read("activity_history")
-        tasks = self.store.read("tasks")
-        acts = self.store.read("activities")
-        joined = (
-            hist.join(tasks, hist["task_id"] == tasks["id"])
-            .join(acts, hist["activity_id"] == acts["id"])
-            .select("activity_id", "sceneid", "activity_type", "status",
-                    "start")
-        )
-        w = Window.partitionBy("activity_id").orderBy(
-            F.col("start").desc(), F.col("status"))
-        return (
-            joined.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1)
-                    & ~F.col("status").isin("SUCCESS", "FAILURE"))
-            .drop("rn")
-        )
+        activity is non-terminal."""
+        return latest_attempts(attempts(self.store)).filter(
+            ~F.col("status").isin("SUCCESS", "FAILURE"))
 
     def collections_available(self) -> DataFrame:
         """GET /utils/collections-available (controller.py:471-474):
@@ -336,8 +299,9 @@ class CollectionBuilderEngine:
                            collection_id: int | None = None) -> DataFrame:
         """F4 — restart filters (controller.py:86-108); returns the
         activities that would be re-dispatched. ``sceneid`` accepts a
-        comma-separated string or list (controller.py:100-105)."""
-        acts = self.store.read("activities")
+        comma-separated string or list (controller.py:100-105);
+        ``status`` matches each activity's latest attempt."""
+        acts = activities(self.store, collection_id)
         if ids:
             acts = acts.filter(F.col("id").isin(*ids))
         if sceneid:
@@ -346,17 +310,11 @@ class CollectionBuilderEngine:
             acts = acts.filter(F.col("sceneid").isin(*scenes))
         if activity_type:
             acts = acts.filter(F.col("activity_type") == activity_type)
-        if collection_id is not None:
-            acts = acts.filter(F.col("collection_id") == collection_id)
         if status:
-            latest = latest_per_group(
-                self.store.read("activity_history"), ["activity_id"], "start")
-            tasks = self.store.read("tasks").select(
-                F.col("id").alias("task_id"), "status")
-            with_status = latest.join(tasks, "task_id").filter(
-                F.col("status") == status).select("activity_id")
-            acts = acts.join(
-                with_status, acts["id"] == F.col("activity_id"), "left_semi")
+            latest = latest_attempts(attempts(self.store)).filter(
+                F.col("status") == status)
+            acts = acts.join(latest, acts["id"] == latest["activity_id"],
+                             "left_semi")
         return acts
 
     def due_retries(self, now: dt.datetime | None = None) -> DataFrame:

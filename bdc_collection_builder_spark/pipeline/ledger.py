@@ -11,7 +11,10 @@ Spark re-expression: the ledger is a catalog table; dispatch is a
 dedup + MERGE (Y5), execution history is an append, and the retry
 horizon is a *due-rows* query over a persisted ledger — state lives in
 the table, never in streaming memory, so an engine restart loses
-nothing (SURVEY §7.3 hard part d).
+nothing (SURVEY §7.3 hard part d). The monitoring plane reads the
+ledger through :func:`attempts` and :func:`latest_attempts` only, so
+the reference's filters and the choice of an activity's latest attempt
+live here once.
 """
 
 from __future__ import annotations
@@ -117,24 +120,59 @@ def record_attempts(store: CatalogStore, attempts: DataFrame) -> None:
     ))
 
 
-def failed_latest(store: CatalogStore) -> DataFrame:
-    """J5/W2 — scenes whose LATEST attempt is not SUCCESS: single
-    ranking window over history ⋈ tasks, no join-back CTE."""
-    hist = store.read("activity_history")
-    tasks = store.read("tasks")
+def activities(store: CatalogStore, collection: int | None = None,
+               type_contains: str | None = None) -> DataFrame:
+    """The activities table under the reference's activity filters
+    (controller.py:426-495): collection equality, activity_type
+    contains."""
     acts = store.read("activities")
-    joined = (
-        hist.join(tasks, hist["task_id"] == tasks["id"])
-        .join(acts, hist["activity_id"] == acts["id"])
+    if collection is not None:
+        acts = acts.filter(F.col("collection_id") == collection)
+    if type_contains:
+        acts = acts.filter(F.col("activity_type").contains(type_contains))
+    return acts
+
+
+def attempts(store: CatalogStore, start_date: str | None = None,
+             last_date: str | None = None, collection: int | None = None,
+             type_contains: str | None = None) -> DataFrame:
+    """J1 — one row per execution attempt, history ⋈ tasks ⋈ activities,
+    the join every monitoring query of the reference reads. The date
+    bounds are inclusive days on ``start``; the activity filters are
+    those of :func:`activities`."""
+    hist = store.read("activity_history")
+    if start_date:
+        hist = hist.filter(F.col("start") >= F.lit(f"{start_date} 00:00:00"))
+    if last_date:
+        hist = hist.filter(F.col("start") <= F.lit(f"{last_date} 23:59:00"))
+    tasks = store.read("tasks").select(F.col("id").alias("task_id"), "status")
+    acts = activities(store, collection, type_contains).select(
+        F.col("id").alias("activity_id"), "sceneid", "activity_type")
+    return (
+        hist.select("activity_id", "task_id", "start")
+        .join(tasks, "task_id")
+        .join(acts, "activity_id")
         .select("activity_id", "sceneid", "activity_type", "status", "start")
     )
+
+
+def latest_attempts(df: DataFrame) -> DataFrame:
+    """W1/W2 — each activity's latest attempt among ``df``'s rows: one
+    ranking window, ``start DESC, status ASC`` (a tie on ``start`` goes
+    to the alphabetically first status, e.g. FAILURE over SUCCESS)."""
     w = Window.partitionBy("activity_id").orderBy(
         F.col("start").desc(), F.col("status"))
     return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("status") != "SUCCESS"))
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
         .drop("rn")
     )
+
+
+def failed_latest(store: CatalogStore) -> DataFrame:
+    """J5/W2 — activities whose latest attempt is not SUCCESS."""
+    return latest_attempts(attempts(store)).filter(
+        F.col("status") != "SUCCESS")
 
 
 def due_retries(store: CatalogStore, now: dt.datetime) -> DataFrame:

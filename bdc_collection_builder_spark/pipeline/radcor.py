@@ -1,6 +1,6 @@
 """The radcor entry point: search → prune → dispatch → execute
 (the reference's POST /api/radcor lifecycle, SURVEY §3.1), plus the
-monitoring/analytics plane (§3.3).
+check-scenes set algebra (§3.3).
 
 The Celery canvas (group/chain, controller.py:318-365) becomes plain
 function composition over scene DataFrames: stage-internal parallelism
@@ -144,31 +144,4 @@ def check_scenes(store: CatalogStore, remote: DataFrame,
             missing_internal.agg(F.count("*").alias("missing_in_catalog"))))
         .crossJoin(F.broadcast(
             missing_external.agg(F.count("*").alias("missing_in_provider"))))
-    )
-
-
-def count_activities(store: CatalogStore,
-                     start_date: str | None = None,
-                     last_date: str | None = None,
-                     collection: int | None = None,
-                     type_contains: str | None = None) -> DataFrame:
-    """A1/J1 — status histogram over the full ledger join, with the
-    reference's optional filters (controller.py:426-446: start_date/
-    last_date bound history.start inclusive-day, collection equality,
-    activity_type contains)."""
-    hist = store.read("activity_history")
-    tasks = store.read("tasks")
-    acts = store.read("activities")
-    if start_date:
-        hist = hist.filter(F.col("start") >= F.lit(f"{start_date} 00:00:00"))
-    if last_date:
-        hist = hist.filter(F.col("start") <= F.lit(f"{last_date} 23:59:00"))
-    if collection is not None:
-        acts = acts.filter(F.col("collection_id") == collection)
-    if type_contains:
-        acts = acts.filter(F.col("activity_type").contains(type_contains))
-    return (
-        hist.join(tasks, hist["task_id"] == tasks["id"])
-        .join(acts, hist["activity_id"] == acts["id"])
-        .groupBy("status").agg(F.count("*").alias("n"))
     )

@@ -10,6 +10,11 @@ from pyspark.sql import functions as F
 from bdc_collection_builder_spark.catalog.fixtures import make_fixtures
 from bdc_collection_builder_spark.catalog.store import CatalogStore
 from bdc_collection_builder_spark.engine import CollectionBuilderEngine
+from bdc_collection_builder_spark.pipeline.ledger import (
+    attempts,
+    latest_attempts,
+    record_attempts,
+)
 from bdc_collection_builder_spark.pipeline.radcor import RadcorQuery
 
 
@@ -53,6 +58,31 @@ def test_restart_filters(engine):
                                     collection_id=1).collect()
     assert all(r.activity_type == "download" and r.collection_id == 1
                for r in sub)
+
+
+def test_latest_attempt_tie_breaks_by_status(spark, tmp_path):
+    """A FAILURE recorded at the same ``start`` as an activity's latest
+    SUCCESS wins the tie (``start DESC, status ASC``) in every view
+    that reads the latest attempt."""
+    fixtures = make_fixtures(spark, n_scenes=60, n_tiles=6)
+    store = CatalogStore(spark, str(tmp_path / "tie_catalog"))
+    for name in ("activities", "activity_history", "tasks"):
+        store.overwrite(name, fixtures[name])
+    tied = CollectionBuilderEngine(spark, store)
+    ok = (latest_attempts(attempts(store))
+          .filter(F.col("status") == "SUCCESS").orderBy("activity_id")
+          .first())
+    record_attempts(store, spark.createDataFrame(
+        [(ok.activity_id, "FAILURE", ok.start)],
+        "activity_id long, status string, ts timestamp_ntz"))
+
+    def has(df, col="activity_id"):
+        return df.filter(F.col(col) == ok.activity_id).count() > 0
+
+    assert has(tied.count_failed_activities())
+    assert has(tied.restart_activities(status="FAILURE"), "id")
+    assert not has(tied.restart_activities(status="SUCCESS"), "id")
+    assert not has(tied.stats_pending())
 
 
 def test_preview_and_check(engine):

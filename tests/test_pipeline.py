@@ -15,6 +15,7 @@ from bdc_collection_builder_spark.catalog.fixtures import make_fixtures
 from bdc_collection_builder_spark.catalog.schemas import SCHEMAS
 from bdc_collection_builder_spark.catalog.store import CatalogStore
 from bdc_collection_builder_spark.pipeline.ledger import (
+    attempts,
     due_retries,
     failed_latest,
     record_attempts,
@@ -22,7 +23,6 @@ from bdc_collection_builder_spark.pipeline.ledger import (
 from bdc_collection_builder_spark.pipeline.radcor import (
     RadcorQuery,
     check_scenes,
-    count_activities,
     radcor_dispatch,
     radcor_preview,
     search,
@@ -205,7 +205,8 @@ def test_check_scenes_and_counts(spark, fixtures, store):
     report = check_scenes(store, fixtures["scenes_remote"], _query()).collect()[0]
     assert report.total_external > 0
     assert report.missing_in_catalog > 0      # unpublished + S2B extras
-    counts = {r.status: r.n for r in count_activities(store).collect()}
+    counts = {r.status: r["count"] for r in
+              attempts(store).groupBy("status").count().collect()}
     assert counts.get("SUCCESS", 0) > 0 and counts.get("FAILURE", 0) > 0
 
 
@@ -874,79 +875,6 @@ def test_pins_visible_across_store_instances(spark, tmp_path, fixtures):
     assert s1.clean_stale_pins() == 0  # no leaked markers
 
 
-def test_conditional_put_cas_backend(spark, tmp_path, fixtures):
-    """The object-store seam: with ConditionalPutCAS the commit
-    protocol must behave identically — including retry on a rejected
-    conditional PUT (the S3 If-Match failure path, faked here)."""
-    from bdc_collection_builder_spark.catalog.store import (
-        CatalogStore,
-        ConditionalPutCAS,
-    )
-
-    rejections = {"left": 2, "seen": 0}
-    inner = ConditionalPutCAS()
-
-    def flaky_put(path, expected, new):
-        rejections["seen"] += 1
-        if rejections["left"] > 0:
-            rejections["left"] -= 1
-            return False  # object store says: precondition failed
-        return ConditionalPutCAS._local_put_if_match(
-            flaky_put.store, flaky_put.table, expected, new)
-
-    backend = ConditionalPutCAS(put_if_match=flaky_put)
-    s = CatalogStore(spark, str(tmp_path / "condput"),
-                     cas_backend=backend)
-    flaky_put.store, flaky_put.table = s, "items"
-    s.overwrite("items", fixtures["items"].limit(5))
-    # merge: first two flips are rejected; the CAS loop must re-derive
-    # and land everything with no rows lost
-    s.merge_upsert("items", fixtures["items"].limit(30))
-    assert rejections["left"] == 0 and rejections["seen"] >= 3
-    assert s.read("items").count() == 30
-    assert inner is not backend._put  # sanity: fake actually injected
-
-
-def test_conditional_put_cas_threaded(spark, tmp_path, fixtures):
-    """The 4-writer contention test again, but through the
-    conditional-PUT backend's local emulation — proves the OCC loop is
-    backend-agnostic end-to-end."""
-    import threading
-
-    from bdc_collection_builder_spark.catalog.store import (
-        CatalogStore,
-        CommitConflict,
-        ConditionalPutCAS,
-    )
-
-    s = CatalogStore(spark, str(tmp_path / "condput_threads"),
-                     cas_backend=ConditionalPutCAS())
-    s.overwrite("items", fixtures["items"].filter(F.col("id") < 0))
-    ranges = [(1, 15), (16, 30), (31, 45), (46, 60)]
-    batches = [fixtures["items"].filter((F.col("id") >= lo)
-                                        & (F.col("id") <= hi))
-               for lo, hi in ranges]
-    expected = sum(b.count() for b in batches)
-    errors = []
-
-    def worker(batch):
-        for _ in range(10):
-            try:
-                s.merge_upsert("items", batch)
-                return
-            except CommitConflict:
-                continue
-        errors.append("retries exhausted")
-
-    threads = [threading.Thread(target=worker, args=(b,)) for b in batches]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join(timeout=240)
-    assert not errors
-    assert s.read("items").count() == expected
-
-
 def test_http_download_real_wire(spark, tmp_path):
     """Genuine HTTP download with failover: a flaky loopback provider
     (503 on the md5 offline rule), a dead port (connection refused),
@@ -1170,54 +1098,6 @@ def test_docker_correction_stage_full_control_flow(spark, tmp_path):
     for sid in scenes:
         want = hashlib.md5(f"{sid}|payload".encode()[::-1]).hexdigest()
         assert by_sid[sid].output_checksum == want, sid
-
-
-def test_partitioned_store_with_conditional_put_backend(spark, tmp_path,
-                                                        fixtures):
-    """Backend matrix completion: the partitioned store's one-job merge
-    and its per-partition CAS fallback both flip pointers through the
-    injected backend — under ConditionalPutCAS (object-store seam) a
-    multi-partition merge, a conflicting concurrent flip, and the
-    re-derive fallback must all behave exactly as under flock."""
-    from bdc_collection_builder_spark.catalog.store import (
-        ConditionalPutCAS,
-        PartitionedCatalogStore,
-    )
-
-    s = PartitionedCatalogStore(spark, str(tmp_path / "pstore_cp"),
-                                cas_backend=ConditionalPutCAS())
-    s.overwrite("items", fixtures["items"])
-    total = s.read("items").count()
-    batch = (s.read("items").limit(8)
-             .withColumn("cloud_cover", F.lit(-55.0)))
-    n_batch = batch.count()
-    s.merge_upsert("items", batch)
-    assert s.read("items").count() == total
-    assert s.read("items").filter(
-        F.col("cloud_cover") == -55.0).count() == n_batch
-    # forced conflict: reject the first conditional PUT once
-    rejected = {"n": 0}
-
-    def flaky(path, expected, new):
-        if rejected["n"] == 0:
-            rejected["n"] += 1
-            return False
-        return ConditionalPutCAS._local_put_if_match(
-            flaky.store, "items", expected, new)
-
-    s2 = PartitionedCatalogStore(
-        spark, str(tmp_path / "pstore_cp"),
-        cas_backend=ConditionalPutCAS(put_if_match=flaky))
-    batch2 = (s2.read("items").limit(4)
-              .withColumn("cloud_cover", F.lit(-66.0)))
-    n2 = batch2.count()
-    v2 = batch2.select("collection_id").distinct().collect()[0][0]
-    flaky.store = s2._sub("items", v2)
-    s2.merge_upsert("items", batch2)
-    assert rejected["n"] == 1, "conflict path was not exercised"
-    assert s2.read("items").count() == total
-    assert s2.read("items").filter(
-        F.col("cloud_cover") == -66.0).count() == n2
 
 
 def test_merge_schema_evolution(store, fixtures, spark):

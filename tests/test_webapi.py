@@ -8,6 +8,7 @@ import io
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.catalog.fixtures import make_fixtures
 from bdc_collection_builder_spark.catalog.store import CatalogStore
@@ -63,6 +64,13 @@ def test_activities_pagination_envelope(app):
     assert filtered["total"] == len(filtered["items"])
     assert all(i["collection_id"] == 1 for i in filtered["items"])
     assert filtered["total"] <= body["total"]
+    # last_execution is the activity's latest history start
+    last = {r.activity_id: r.m and r.m.isoformat() for r in
+            app.engine.store.read("activity_history").groupBy("activity_id")
+            .agg(F.max("start").alias("m")).collect()}
+    assert any(i["last_execution"] for i in filtered["items"])
+    assert all(i["last_execution"] == last.get(i["id"])
+               for i in body["items"] + filtered["items"])
 
 
 def test_radcor_preview_and_start(app):
@@ -136,6 +144,9 @@ def test_count_activities_forwards_filters(app):
                            query="type=download")
     assert status == 200
     assert sum(r["n"] for r in by_date) == sum(r["n"] for r in typed)
+    status, all_dates = call(app, "GET", "/api/utils/count-activities-date")
+    assert status == 200
+    assert sum(r["n"] for r in all_dates) == total
 
 
 def test_restart_get_query_cap_is_414(app):
