@@ -1409,21 +1409,27 @@ class PartitionedCatalogStore(CatalogStore):
     def read(self, table: str) -> DataFrame:
         if table not in self.partition_cols:
             return super().read(table)
+        gens = []
+        for value in self._partition_values(table):
+            sub = self._sub(table, value)
+            gen = sub._current_gen(table)
+            if gen is not None:
+                gens.append((sub, gen))
+        return self._scan_generations(table, gens)
+
+    def _scan_generations(self, table: str,
+                          gens: list[tuple[CatalogStore, str]]) -> DataFrame:
+        """Read partition generations ``(sub_store, gen)`` grouped by
+        their schema (the base schema unless an evolving merge left a
+        _SCHEMA.json marker): one scan per distinct schema, reconciled
+        by an allowMissingColumns union — partitions never touched
+        since an evolution read NULL for the added columns."""
         import json as _json
 
         from pyspark.sql.types import StructType
 
-        # group partitions by their current generation's schema (base
-        # schema unless an evolving merge left a _SCHEMA.json marker):
-        # one scan per distinct schema, reconciled by an
-        # allowMissingColumns union — partitions never touched since an
-        # evolution read NULL for the added columns
         groups: dict[str, list[str]] = {}
-        for value in self._partition_values(table):
-            sub = self._sub(table, value)
-            gen = sub._current_gen(table)
-            if gen is None:
-                continue
+        for sub, gen in gens:
             sj = sub._gen_schema(table, gen).json()
             groups.setdefault(sj, []).append(
                 os.path.join(sub.path(table), gen))
@@ -1765,30 +1771,8 @@ class PartitionedCatalogStore(CatalogStore):
                 sub._unprotect(table, g)
                 base_gens[str(value)] = sub._current_gen(table)
         # Read the touched partitions' current generations with their
-        # OWN (possibly evolved) schemas: paths sharing a schema scan
-        # together; divergent groups reconcile via an
-        # allowMissingColumns union (bounded by #touched partitions).
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        schema_groups: dict[str, list[str]] = {}
-        for sub, g in pinned_subs:
-            sj = sub._gen_schema(table, g).json()
-            schema_groups.setdefault(sj, []).append(
-                os.path.join(sub.path(table), g))
-        frames = [
-            self.spark.read.schema(
-                StructType.fromJson(_json.loads(sj))).parquet(*paths)
-            for sj, paths in schema_groups.items()
-        ]
-        if not frames:
-            current = self.spark.createDataFrame([], SCHEMAS[table])
-        else:
-            current = frames[0]
-            for fdf in frames[1:]:
-                current = current.unionByName(
-                    fdf, allowMissingColumns=True)
+        # OWN (possibly evolved) schemas (bounded by #touched partitions).
+        current = self._scan_generations(table, pinned_subs)
         # _merged aligns both sides to the evolved column set (typed
         # NULL fill) and broadcast-anti-joins the incoming keys — the
         # same plan the inline kept/union used, plus evolution.

@@ -400,27 +400,26 @@ class CollectionBuilderEngine:
                      docker: dict | None = None) -> DataFrame:
         """download → correction → publish → post over scene rows.
 
-        By default the side-effecting stages run their deterministic
-        simulators; pass ``http_providers`` (ordered (name, base_url))
-        + ``processor_versions`` ((version, argv-template)) +
-        ``work_dir`` to run the REAL-IO forms instead — genuine HTTP
-        download with failover/checksums and genuine child-process
-        correction with exit-code version fallback
-        (pipeline/stages.http_download_stage /
-        subprocess_correction_stage). Pass ``docker`` (dict with
+        By default download and correction run the one deterministic
+        simulator (pipeline/stages.download_correction_stage). Pass
+        ``http_providers`` (ordered (name, base_url)) +
+        ``processor_versions`` ((version, argv-template)) + ``work_dir``
+        to run the REAL-IO forms instead: genuine HTTP download with
+        failover/checksums (http_download_stage), then the one
+        child-process loop with timeout and exit-code version fallback
+        (subprocess_correction_stage). Pass ``docker`` (dict with a
         ``versions`` list, optional ``image``/``bin``/``timeout``)
-        instead of ``processor_versions`` to run correction through
-        the containerized boundary (docker_correction_stage — the
-        reference's `docker run` with timeout + stop cleanup). Either
-        way the Spark plumbing, the publish MERGE, and the post-stage
-        quality mask are identical; the post stage runs on a
-        deterministic pixel grid per published scene (the raster read
-        is the documented rasterio seam)."""
+        instead of ``processor_versions`` to run that loop over the
+        reference's ``docker run`` / ``docker stop`` argv
+        (docker_versions). Either way the Spark plumbing, the publish
+        MERGE, and the post-stage quality mask are identical; the post
+        stage runs on a deterministic pixel grid per published scene
+        (the raster read is the documented rasterio seam)."""
         if http_providers is not None:
             import os as _os
 
             from bdc_collection_builder_spark.pipeline.stages import (
-                docker_correction_stage,
+                docker_versions,
                 http_download_stage,
                 subprocess_correction_stage,
             )
@@ -433,19 +432,14 @@ class CollectionBuilderEngine:
             downloaded = http_download_stage(
                 scenes.select("scene_id", "collection_id"),
                 http_providers, _os.path.join(work_dir, "downloads"))
-            ok = downloaded.filter(F.col("status") == "SUCCESS")
             if docker is not None:
-                corrected = docker_correction_stage(
-                    ok, versions=docker["versions"],
-                    out_dir=_os.path.join(work_dir, "corrected"),
-                    image=docker.get("image", "sen2cor"),
-                    timeout=docker.get("timeout", 60.0),
-                    docker_bin=docker.get("bin", "docker"),
-                ).drop("timed_out_versions")
-            else:
-                corrected = subprocess_correction_stage(
-                    ok, processor_versions,
-                    _os.path.join(work_dir, "corrected"))
+                processor_versions = docker_versions(
+                    docker["versions"], docker.get("image", "sen2cor"),
+                    docker.get("bin", "docker"))
+            corrected = subprocess_correction_stage(
+                downloaded.filter(F.col("status") == "SUCCESS"),
+                processor_versions, _os.path.join(work_dir, "corrected"),
+                (docker or {}).get("timeout", 60.0))
         else:
             providers = provider_names or [
                 r.driver_name for r in

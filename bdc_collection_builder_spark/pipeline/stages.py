@@ -1,19 +1,25 @@
 """Pipeline stages: download → correction → publish → post.
 
 Each stage is a DataFrame transformation over scene rows. Metadata work
-is pure Catalyst; side-effecting work (network download, subprocess
-processor, raster IO) runs inside ``mapInPandas`` with the exact
-control flow of the reference. Download has a REAL wire path
-(:func:`http_download_stage` — genuine HTTP with failover + checksum
-validation; loopback fixture providers in the sandbox, real endpoints
-in production) alongside the deterministic simulator
-(:func:`download_stage`); the processor stage likewise has a real
-child-process path (:func:`subprocess_correction_stage` — actual spawn
-+ exit-code-driven version fallback; a local fixture install here, the
-Docker/Singularity argv in production). The Spark-side plumbing
-(schemas, batch shapes,
-partitioning by scene) is the real design: on a cluster each partition
-is a batch of scenes and the stage UDFs run the same loops against real
+is pure Catalyst; side-effecting work (network download, processor
+child processes, raster IO) runs inside ``mapInPandas`` with the
+control flow of the reference. Each side-effecting step has one
+implementation per form:
+
+- one simulator, :func:`download_correction_stage`: provider failover
+  and processor version fallback decided by deterministic md5 rules,
+  both in one pass (:func:`split_fused` gives the per-step views);
+- one real download, :func:`http_download_stage`: genuine HTTP with
+  failover and checksum validation (loopback fixture providers in
+  tests, real endpoints in production);
+- one processor loop, :func:`subprocess_correction_stage`: a real
+  child process per candidate version, with timeout, stop and
+  exit-code fallback. :func:`docker_versions` supplies the
+  ``docker run`` / ``docker stop`` argv for the same loop.
+
+The Spark-side plumbing (schemas, batch shapes, partitioning by scene)
+is the real design: on a cluster each partition is a batch of scenes
+and the stage UDFs run the same loops against real
 providers/processors.
 
 Reference control flow being mirrored:
@@ -41,135 +47,8 @@ DOWNLOAD_SCHEMA = (
     "attempts int, compressed_file string, checksum string, status string"
 )
 
-
-# Offline-data simulation oracle (stand-in for DataOfflineError on LTA
-# archives): provider p is "offline" for scene s iff
-# int(md5(f"{s}:{p}").hexdigest()[:2], 16) % 5 == 0. Evaluated JVM-side
-# in download_stage as conv(substr(md5(s||':'||p),1,2),16,10) % 5 = 0 —
-# the DuckDB oracles in plans/sources.py decode the same digests.
-
-
-def download_stage(scenes: DataFrame, provider_names: list[str]) -> DataFrame:
-    """S2/S3 — download with provider-priority failover. The ordered
-    provider list (J3 query result, collected — it is dimension-sized)
-    is closed over by the UDF; each scene tries providers in order,
-    falling through on offline/checksum errors exactly like
-    tasks.py:205-236. Scene rows are processed per-partition — the
-    stage parallelism IS partition parallelism, so the input is
-    repartitioned by scene_id first: scene lists typically arrive as a
-    handful of catalog-search result files, and an IO-bound stage
-    running on one partition would serialize the whole fleet (at 100 TB
-    the partition count bounds concurrent provider connections)."""
-    # The simulator's md5 oracle (offline? per provider + checksum) is
-    # computed JVM-side in whole-stage codegen — identical values to
-    # hashlib (_simulated_offline), since conv(substr(md5(x),1,2),16,10)
-    # IS int(digest[:2],16). The Python stage below only runs the
-    # failover CONTROL FLOW over those flags, vectorized in numpy; with
-    # a real downloader the flags become actual HTTP attempts and this
-    # split stands: cheap per-scene metadata JVM-side, IO Python-side.
-    n_prov = len(provider_names)
-    off_flags = [
-        (F.conv(F.substring(
-            F.md5(F.concat(F.col("scene_id"), F.lit(f":{p}"))), 1, 2),
-            16, 10).cast("int") % 5 == 0).alias(f"__off{i}")
-        for i, p in enumerate(provider_names)
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        providers = np.array(provider_names, dtype=object)
-        for pdf in batches:
-            online = ~pdf[[f"__off{i}" for i in range(n_prov)]] \
-                .to_numpy(dtype=bool)
-            any_on = online.any(axis=1)
-            first = online.argmax(axis=1)           # first online provider
-            ok = pd.Series(any_on, index=pdf.index)
-            sid = pdf["scene_id"]
-            yield pd.DataFrame({
-                "scene_id": sid,
-                "collection_id": pdf["collection_id"],
-                "provider_used":
-                    pd.Series(providers[first], index=pdf.index)
-                    .where(ok, None),
-                "attempts": np.where(any_on, first + 1, n_prov)
-                    .astype("int32"),
-                "compressed_file":
-                    ("/archive/downloads/" + sid + ".zip").where(ok, None),
-                "checksum": pdf["__md5"].where(ok, None),
-                "status": np.where(any_on, "SUCCESS", "OFFLINE"),
-            })
-
-    parallelism = scenes.sparkSession.sparkContext.defaultParallelism
-    return (
-        scenes.select("scene_id", "collection_id")
-        .repartition(parallelism, "scene_id")
-        .select("scene_id", "collection_id", *off_flags,
-                F.md5("scene_id").alias("__md5"))
-        .mapInPandas(run, DOWNLOAD_SCHEMA)
-    )
-
-
-CORRECTION_SCHEMA = (
-    "scene_id string, collection_id int, processor string, "
-    "processor_version string, output_file string, returncode int"
-)
-
 PROCESSOR_VERSIONS = {"sen2cor": ["2.11.0", "2.10.0", "2.5.5"],
                       "lasrc": ["2.0.1"]}
-
-
-def correction_stage(downloaded: DataFrame,
-                     collections: DataFrame) -> DataFrame:
-    """Z2 — external black-box processor stage. Processor comes from the
-    collection metadata (tasks.py:259-260); the UDF walks the version
-    fallback list like processor.py:27-101 walks Sen2Cor installs. The
-    collections dimension is broadcast-joined — the scene side never
-    shuffles."""
-    with_proc = downloaded.filter(F.col("status") == "SUCCESS").join(
-        F.broadcast(collections.select(
-            F.col("id").alias("collection_id"),
-            F.get_json_object("metadata", "$.processors[0].name").alias("processor"))),
-        "collection_id")
-
-    # Version fallback resolved JVM-side: the candidate list per
-    # processor is a dimension-sized literal; the "does this install
-    # work" md5 oracle evaluates inside codegen (same value as
-    # hashlib's int(digest[:2],16) % 7), and the first passing
-    # candidate is picked with filter + get — null when none pass.
-    # The Python stage is the subprocess seam: a real deployment execs
-    # the processor there, consuming the resolved version.
-    proc = F.coalesce(F.col("processor"), F.lit("sen2cor"))
-    cand_arr = F.array(F.lit("0"))
-    for pname, versions in PROCESSOR_VERSIONS.items():
-        cand_arr = F.when(
-            proc == pname, F.array(*[F.lit(v) for v in versions])
-        ).otherwise(cand_arr)
-    version_ok = lambda c: (  # noqa: E731 — inline oracle predicate
-        F.conv(F.substring(
-            F.md5(F.concat_ws(":", F.col("scene_id"), proc, c)), 1, 2),
-            16, 10).cast("int") % 7 != 0)
-    resolved = F.get(F.filter(cand_arr, version_ok), 0)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sid = pdf["scene_id"]
-            success = pdf["__version"].notna()
-            yield pd.DataFrame({
-                "scene_id": sid,
-                "collection_id": pdf["collection_id"],
-                "processor": pdf["processor"],
-                "processor_version": pdf["__version"],
-                "output_file":
-                    ("/archive/corrected/" + sid).where(success, None),
-                "returncode": (~success).astype("int32"),
-            })
-
-    return with_proc.select(
-        "scene_id", "collection_id", proc.alias("processor"),
-        resolved.alias("__version"),
-    ).mapInPandas(run, CORRECTION_SCHEMA)
-
 
 FUSED_SCHEMA = (
     DOWNLOAD_SCHEMA + ", processor string, processor_version string, "
@@ -179,21 +58,28 @@ FUSED_SCHEMA = (
 
 def download_correction_stage(scenes: DataFrame, provider_names: list[str],
                               collections: DataFrame) -> DataFrame:
-    """Fused download + correction (S2/S3 + Z2) in ONE ``mapInPandas``
-    pass — the chained form pays two Arrow serialization boundaries per
-    scene batch (JVM→Python→JVM→Python→JVM) and the boundary, not the
-    work, dominates the stage cost. Everything the correction stage
-    needs from the JVM (processor from the broadcast collections dim,
-    version-fallback resolution) is computable BEFORE the download
-    control flow runs, so both stages' Python loops run back-to-back on
-    the same Arrow batch.
+    """S2/S3 + Z2 simulator — download with provider-priority failover
+    (tasks.py:205-236), then the processor's version fallback
+    (processor.py:27-101), in ONE ``mapInPandas`` pass per scene batch.
 
-    Semantics are identical to
-    ``correction_stage(download_stage(...), ...)``; use
-    :func:`split_fused` to recover the per-stage DataFrames (pinned by
-    tests/test_pipeline.py::test_fused_stage_matches_chained). On a
-    real deployment the same fusion holds: one Python worker holds the
-    scene batch across download and subprocess exec, halving IPC."""
+    The input is repartitioned by scene_id first: the stage parallelism
+    IS partition parallelism, and scene lists typically arrive as a
+    handful of catalog-search files (at 100 TB the partition count
+    bounds concurrent provider connections). The processor comes from
+    the broadcast collections dimension (tasks.py:259-260), so the
+    scene side never shuffles; ``in_catalog`` marks scenes whose
+    collection is cataloged.
+
+    Offline data (DataOfflineError on LTA archives) and broken installs
+    are md5 rules, evaluated JVM-side in codegen: provider p is offline
+    for scene s iff ``int(md5(f"{s}:{p}")[:2], 16) % 5 == 0``, and
+    version v of processor r works iff
+    ``int(md5(f"{s}:{r}:{v}")[:2], 16) % 7 != 0``
+    (``conv(substring(md5(..), 1, 2), 16, 10)`` is the same value). The
+    DuckDB oracles in plans/sources.py decode the same digests. The
+    Python side runs only the failover control flow over those flags,
+    vectorized in numpy. Use :func:`split_fused` for the per-step
+    DataFrames."""
     n_prov = len(provider_names)
     off_flags = [
         (F.conv(F.substring(
@@ -271,8 +157,9 @@ def download_correction_stage(scenes: DataFrame, provider_names: list[str],
 
 
 def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(downloaded, corrected) views of the fused stage output, each
-    schema-identical to its chained counterpart."""
+    """(downloaded, corrected) views of the simulator's output: every
+    scene's download outcome, and the correction outcome of each
+    downloaded scene whose collection is cataloged."""
     downloaded = fused.select(
         "scene_id", "collection_id", "provider_used", "attempts",
         "compressed_file", "checksum", "status")
@@ -365,7 +252,7 @@ def http_download_stage(scenes: DataFrame,
                         providers: list[tuple[str, str]],
                         out_dir: str,
                         timeout: float = 10.0) -> DataFrame:
-    """REAL network form of :func:`download_stage`: each scene issues
+    """REAL network form of the download step: each scene issues
     actual HTTP GETs (urllib, executor-side) against an ordered
     ``(provider_name, base_url)`` failover list, validates the payload
     md5 against the server's ``X-Content-MD5`` header, and writes the
@@ -484,13 +371,17 @@ def write_fixture_processor(path: str) -> None:
     ``argv = [python, path, version, input, output]``; a '2.11.0'
     invocation deterministically fails (exit 3) for scenes where the
     version-broken md5 rule fires — the same rule the s02 simulator
-    decodes — so the stage's version-fallback loop is exercised by a
-    REAL child process's returncode, not a flag."""
+    decodes — and HANGS (until killed) for scene ids containing 'HANG'
+    (both rules as in :func:`write_fake_docker`), so the stage's
+    version-fallback loop is exercised by a REAL child process's
+    returncode and timeout, not a flag."""
     script = '''
-import hashlib, sys
+import hashlib, sys, time
 version, inp, out = sys.argv[1], sys.argv[2], sys.argv[3]
 data = open(inp, "rb").read()
 sid = data.decode().split("|")[0]
+if "HANG" in sid and version == "2.11.0":
+    time.sleep(300)
 if version == "2.11.0" and int(hashlib.md5(
         (sid + ":2.11.0").encode()).hexdigest()[:2], 16) % 7 == 0:
     sys.exit(3)
@@ -501,103 +392,44 @@ open(out, "wb").write(data[::-1])
 
 
 def subprocess_correction_stage(downloaded: DataFrame,
-                                versions: list[tuple[str, list[str]]],
+                                versions: list[tuple],
                                 out_dir: str,
                                 timeout: float = 60.0) -> DataFrame:
-    """REAL external-processor form of :func:`correction_stage`: each
-    downloaded scene invokes an actual child process per candidate
-    install (``versions`` = ordered (version, argv-template) list with
-    ``{version}``/``{input}``/``{output}`` placeholders), walking the
-    fallback list on nonzero returncodes exactly like processor.py's
-    Sen2Cor install probing — but with genuine process spawn, exit
-    codes, and output files. In this sandbox the argv is a local
-    fixture processor (:func:`write_fixture_processor`); on a cluster
-    it is the Docker/Singularity command line — the stage is unchanged.
-    Emits the md5 of the produced output so downstream (and the DuckDB
-    oracle) can value-check the child process's actual work."""
-    import hashlib
-    import os
-    import subprocess
+    """Z2 with REAL child processes — the processor version-fallback
+    loop of processor.py:27-101, as a mapInPandas stage over scene
+    partitions (partitions bound concurrent children per executor).
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "scene_id", "collection_id", "processor_version",
-                "output_file", "output_checksum", "returncode")}
-            for sid, cid, inp in zip(pdf["scene_id"],
-                                     pdf["collection_id"],
-                                     pdf["compressed_file"]):
-                version_used, rc, opath, digest = None, 1, None, None
-                if inp is not None:
-                    for version, argv in versions:
-                        opath = os.path.join(out_dir, f"{sid}.corrected")
-                        cmd = [a.format(version=version, input=inp,
-                                        output=opath) for a in argv]
-                        proc = subprocess.run(
-                            cmd, timeout=timeout, capture_output=True)
-                        rc = proc.returncode
-                        if rc == 0:
-                            version_used = version
-                            with open(opath, "rb") as fh:
-                                digest = hashlib.md5(fh.read()).hexdigest()
-                            break
-                out["scene_id"].append(sid)
-                out["collection_id"].append(cid)
-                out["processor_version"].append(version_used)
-                out["output_file"].append(opath if version_used else None)
-                out["output_checksum"].append(digest)
-                out["returncode"].append(0 if version_used else rc)
-            yield pd.DataFrame(out)
+    ``versions`` is the ordered candidate list (like
+    SEN2COR_VERSIONS_SUPPORTED) of ``(version, argv)`` or
+    ``(version, argv, stop_argv)``. Argv templates may use
+    ``{version}``, ``{scene}``, ``{input}`` (the downloaded archive),
+    ``{input_dir}`` (its directory), ``{output_dir}`` (the scene's own
+    directory under ``out_dir``) and ``{output}``
+    (``<output_dir>/<scene>.corrected``).
 
-    schema = ("scene_id string, collection_id int, "
-              "processor_version string, output_file string, "
-              "output_checksum string, returncode int")
-    return downloaded.select(
-        "scene_id", "collection_id", "compressed_file"
-    ).mapInPandas(run, schema)
+    Control flow per downloaded scene, mirroring the reference:
 
-
-def docker_correction_stage(downloaded: DataFrame,
-                            versions: list[str],
-                            out_dir: str,
-                            image: str = "sen2cor",
-                            timeout: float = 60.0,
-                            docker_bin: str = "docker") -> DataFrame:
-    """Containerized processor stage — the reference's actual Docker
-    boundary (processor.py:27-101: Sen2Cor ``docker run --rm -i
-    --name <scene> -v <mounts> <image>:<version> <scene>.SAFE`` with
-    per-version fallback, a wall-clock timeout, and ``docker stop
-    <scene>`` cleanup when the container hangs), as a mapInPandas
-    stage over scene partitions.
-
-    Control flow per scene, mirroring the reference exactly:
-
-    1. for each candidate ``version`` (ordered, like
-       SEN2COR_VERSIONS_SUPPORTED): spawn ``docker run`` with the
-       scene's input directory and a per-scene output directory
-       mounted; ``--name <scene_id>`` so a hung container is
-       addressable;
-    2. ``wait(timeout)`` — on TimeoutExpired, ``docker stop
-       <scene_id>`` (the reference's cleanup, processor.py:81-85),
-       then fall through to the next version;
+    1. spawn the candidate's argv and ``wait(timeout)``;
+    2. on TimeoutExpired run ``stop_argv`` if given (``docker stop
+       <scene>``, processor.py:81-85), kill the child and try the next
+       version, counting it in ``timed_out_versions``;
     3. nonzero returncode → next version; returncode 0 → the first
-       entry of the scene's output dir is the product
-       (processor.py:76-78), checksummed for downstream validation.
+       sorted entry of the scene's output dir is the product
+       (processor.py:76-78), md5'd so downstream (and the DuckDB
+       oracle) can value-check the child's actual work.
 
-    ``docker_bin`` is injectable so the stage's full control flow —
-    spawn, timeout, stop, fallback, output discovery — is testable
-    against a PATH shim in environments without a Docker daemon (this
-    sandbox); in production it is literally ``docker`` (or
-    ``singularity run``, same argv shape). Scene partitions bound
-    concurrent containers per executor exactly as partition count
-    bounds provider connections in the download stage."""
+    Here the argv is a local fixture processor
+    (:func:`write_fixture_processor`) or the Docker shim; on a cluster
+    it is the Docker/Singularity command line — the stage is
+    unchanged."""
     import hashlib
     import os
     import subprocess
 
+    quiet = dict(stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+                 stderr=subprocess.DEVNULL)
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        os.makedirs(out_dir, exist_ok=True)
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in (
                 "scene_id", "collection_id", "processor_version",
@@ -611,34 +443,26 @@ def docker_correction_stage(downloaded: DataFrame,
                 if inp is not None:
                     scene_out = os.path.join(out_dir, sid)
                     os.makedirs(scene_out, exist_ok=True)
-                    for version in versions:
-                        args = [
-                            docker_bin, "run", "--rm", "-i",
-                            "--name", sid,
-                            "-v", f"{os.path.dirname(inp)}:/input",
-                            "-v", f"{scene_out}:/output",
-                            f"{image}:{version}", f"{sid}.SAFE",
-                        ]
+                    slots = dict(
+                        scene=sid, input=inp,
+                        input_dir=os.path.dirname(inp),
+                        output_dir=scene_out,
+                        output=os.path.join(scene_out, f"{sid}.corrected"))
+                    for version, argv, *stop in versions:
+                        slots["version"] = version
                         proc = subprocess.Popen(
-                            args, stdin=subprocess.PIPE,
-                            stdout=subprocess.DEVNULL,
-                            stderr=subprocess.DEVNULL)
+                            [a.format(**slots) for a in argv], **quiet)
                         try:
-                            proc.wait(timeout=timeout)
+                            rc = proc.wait(timeout=timeout)
                         except subprocess.TimeoutExpired:
-                            # ensure the container is stopped, then
-                            # treat as a failed version (reference
-                            # raises and falls through, :81-85)
-                            stopper = subprocess.Popen(
-                                [docker_bin, "stop", sid],
-                                stdout=subprocess.DEVNULL,
-                                stderr=subprocess.DEVNULL)
-                            stopper.wait(timeout=30)
+                            if stop:
+                                subprocess.run(
+                                    [a.format(**slots) for a in stop[0]],
+                                    timeout=30, **quiet)
                             proc.kill()
                             proc.wait()
                             n_timeouts += 1
                             continue
-                        rc = proc.returncode
                         if rc == 0:
                             entries = sorted(os.listdir(scene_out))
                             if entries:
@@ -665,6 +489,38 @@ def docker_correction_stage(downloaded: DataFrame,
     return downloaded.select(
         "scene_id", "collection_id", "compressed_file"
     ).mapInPandas(run, schema)
+
+
+def docker_versions(versions: list[str], image: str = "sen2cor",
+                    docker_bin: str = "docker") -> list[tuple]:
+    """The reference's Docker boundary (processor.py:55-85) as
+    :func:`subprocess_correction_stage` candidates: per version,
+    ``docker run --rm -i --name <scene> -v <input_dir>:/input -v
+    <output_dir>:/output <image>:<version> <scene>.SAFE``, with
+    ``docker stop <scene>`` to clean up a hung container. The
+    ``--name`` makes the hung container addressable. ``docker_bin`` is
+    injectable so the full control flow runs against a PATH shim
+    (:func:`write_fake_docker`) without a Docker daemon; in production
+    it is ``docker`` (or ``singularity run``, same argv shape)."""
+    run = [docker_bin, "run", "--rm", "-i", "--name", "{scene}",
+           "-v", "{input_dir}:/input", "-v", "{output_dir}:/output",
+           image + ":{version}", "{scene}.SAFE"]
+    stop = [docker_bin, "stop", "{scene}"]
+    return [(v, run, stop) for v in versions]
+
+
+def docker_correction_stage(downloaded: DataFrame,
+                            versions: list[str],
+                            out_dir: str,
+                            image: str = "sen2cor",
+                            timeout: float = 60.0,
+                            docker_bin: str = "docker") -> DataFrame:
+    """Containerized processor stage: :func:`subprocess_correction_stage`
+    over the :func:`docker_versions` argv, so a hung container is
+    stopped and the scene falls through to the next version."""
+    return subprocess_correction_stage(
+        downloaded, docker_versions(versions, image, docker_bin), out_dir,
+        timeout)
 
 
 def write_fake_docker(path: str) -> None:

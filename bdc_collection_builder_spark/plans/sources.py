@@ -119,22 +119,23 @@ def s01_remote_search_pushdown(spark, sf_dir):
 )
 def s02_download_failover(spark, sf_dir):
     """S2/Z2 — the download-with-failover and external-processor stages
-    (tasks.py:129-240, processor.py:27-101) as mapInPandas over scene
-    partitions with a deterministic IO simulator. The simulator's md5
-    decision chain is re-expressed in the oracle SQL, so this UDF stage
-    is value-checked end-to-end, not rows-only. Partitioning = scene
-    batches; no shuffle enters either stage."""
+    (tasks.py:129-240, processor.py:27-101) as the pipeline's one
+    deterministic IO simulator, a single mapInPandas pass over scene
+    partitions. The simulator's md5 decision chain is re-expressed in
+    the oracle SQL, so this UDF stage is value-checked end-to-end, not
+    rows-only. Partitioning = scene batches; the collections dimension
+    is broadcast."""
     from bdc_collection_builder_spark.pipeline.stages import (
-        correction_stage,
-        download_stage,
+        download_correction_stage,
+        split_fused,
     )
 
-    scenes = _scenes(spark, sf_dir)
-    downloaded = download_stage(scenes, ["usgs", "scihub", "creodias"])
     collections = spark.createDataFrame(
         [(i, '{"processors":[{"name":"sen2cor"}]}') for i in (1, 2, 3)],
         "id int, metadata string")
-    corrected = correction_stage(downloaded, collections)
+    _, corrected = split_fused(download_correction_stage(
+        _scenes(spark, sf_dir), ["usgs", "scihub", "creodias"],
+        collections))
     return corrected.orderBy("scene_id")
 
 

@@ -218,12 +218,16 @@ CENSUS_TRIAGED: dict[str, tuple[float, str]] = {
         "defect (the drain class is documented as left-alone in "
         "OPTIMIZATION_r10.md).")),
     "s02_download_failover": (2.3, (
-        "real-wire HTTP download failover against the loopback "
-        "provider: the wall is socket I/O + provider retry/backoff "
-        "stage machinery, not Spark plan shape. Warm median 2.3-2.5s "
-        "(measured round 10); census one-offs up to ~17s reflect "
-        "retry-timeout bursts under machine contention — "
-        "SF-independent stage cost, documented as left-alone.")),
+        "the md5 download/correction simulator "
+        "(pipeline/stages.download_correction_stage): one scene "
+        "repartition, a broadcast collections join and one mapInPandas "
+        "pass per scene batch, so the wall is the Arrow boundary and "
+        "Python-worker stage machinery, not plan shape. Warm median "
+        "1.70-1.82s at sf0.1 on 4 cores (`python bench.py --queries "
+        "s02_download_failover`, three runs of 5 samples; slowest "
+        "sample 4.1-4.4s). The 2.3s floor is the round-10 warm median, "
+        "kept; round-10 census one-offs reached ~17s under machine "
+        "contention — documented as left-alone.")),
 }
 
 

@@ -155,7 +155,7 @@ def test_full_pipeline_real_io(engine, spark, tmp_path):
         .collect()}
     assert published == names
     for sid in names:
-        corrected = os.path.join(str(tmp_path), "corrected",
+        corrected = os.path.join(str(tmp_path), "corrected", sid,
                                  f"{sid}.corrected")
         with open(corrected, "rb") as fh:
             assert fh.read() == ((sid + "|") * 16).encode()[::-1], sid
@@ -320,10 +320,10 @@ def test_expect_operator_fused_rules(engine, spark):
 def test_full_pipeline_real_io_docker(engine, spark, tmp_path):
     """End-to-end REAL-IO pipeline with the CONTAINER correction
     boundary: genuine HTTP download (loopback providers, failover)
-    into docker_correction_stage (the reference's `docker run` control
-    flow against the argv-faithful shim) into the publish MERGE and
-    post-stage — the full reference topology with the Docker seam
-    exercised, not simulated."""
+    into the processor loop over the reference's `docker run` argv
+    (docker_versions, against the argv-faithful shim) into the publish
+    MERGE and post-stage — the full reference topology with the Docker
+    seam exercised, not simulated."""
     import datetime as dt
     import os
 

@@ -28,10 +28,10 @@ from bdc_collection_builder_spark.pipeline.radcor import (
     search,
 )
 from bdc_collection_builder_spark.pipeline.stages import (
-    correction_stage,
-    download_stage,
+    download_correction_stage,
     post_stage,
     publish_stage,
+    split_fused,
 )
 
 
@@ -114,13 +114,13 @@ def test_stage_flow_end_to_end(spark, fixtures, store):
               .withColumn("collection_id", F.lit(1)))
     scenes_meta = fixtures["scenes_remote"].withColumnRenamed(
         "sensing_date", "sensing_date")
-    downloaded = download_stage(scenes, ["ESA-SciHub", "CREODIAS", "GCS"])
+    downloaded, corrected = split_fused(download_correction_stage(
+        scenes, ["ESA-SciHub", "CREODIAS", "GCS"], fixtures["collections"]))
     dl = downloaded.collect()
     assert dl
     assert all(r.status == "SUCCESS" or r.provider_used is None for r in dl)
     assert any(r.attempts > 1 for r in dl), "failover path must exercise"
 
-    corrected = correction_stage(downloaded, fixtures["collections"])
     cr = corrected.collect()
     assert cr and all(r.processor == "sen2cor" for r in cr)
 
@@ -148,32 +148,6 @@ def test_stage_flow_end_to_end(spark, fixtures, store):
         .drop("scene_id", "pxid").withColumnRenamed("name", "scene_id")
     quality = post_stage(store.read("items").limit(50), px_named)
     assert quality.filter(F.col("n_invalid").isNotNull()).count() > 0
-
-
-def test_fused_stage_matches_chained(spark, fixtures, store):
-    """The fused one-boundary download+correction stage must reproduce
-    the chained two-stage output row-for-row (both halves)."""
-    from bdc_collection_builder_spark.pipeline.stages import (
-        download_correction_stage,
-        split_fused,
-    )
-
-    q = _query()
-    scenes = (radcor_preview(store, fixtures["scenes_remote"], q)
-              .withColumn("collection_id", F.lit(1)))
-    providers = ["ESA-SciHub", "CREODIAS", "GCS"]
-    chained_dl = download_stage(scenes, providers)
-    chained_cr = correction_stage(chained_dl, fixtures["collections"])
-    fused_dl, fused_cr = split_fused(
-        download_correction_stage(scenes, providers, fixtures["collections"]))
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(fused_dl) == rows(chained_dl)
-    assert rows(fused_cr) == rows(chained_cr)
-    assert fused_dl.schema == chained_dl.schema
-    assert fused_cr.schema == chained_cr.schema
 
 
 def test_ledger_failed_latest_and_retries(spark, fixtures, store):
@@ -1048,22 +1022,27 @@ def test_cas_cross_process_merges(tmp_path, sf_dir):
     assert s.clean_stale_pins(max_age_seconds=0) == 0, "leaked pins"
 
 
-def test_docker_correction_stage_full_control_flow(spark, tmp_path):
-    """The reference's Docker boundary (processor.py:27-101) end-to-end
-    against a PATH shim speaking real `docker run`/`docker stop` argv:
-    version fallback on nonzero exit codes, TimeoutExpired -> `docker
-    stop <scene>` -> next version, and mounted-output discovery with
-    checksums. No daemon required; in production docker_bin='docker'."""
+@pytest.mark.parametrize("processor", ["docker", "subprocess"])
+def test_docker_correction_stage_full_control_flow(spark, tmp_path,
+                                                   processor):
+    """The reference's processor boundary (processor.py:27-101)
+    end-to-end, through the Docker shim speaking real `docker run` /
+    `docker stop` argv and through the plain fixture processor: version
+    fallback on nonzero exit codes, TimeoutExpired -> (`docker stop
+    <scene>`) -> next version, and output discovery with checksums. A
+    scene whose 2.11.0 install hangs must fall back to 2.10.0, not
+    abort the job. No daemon required; in production
+    docker_bin='docker'."""
     import hashlib
+    import sys
 
     from bdc_collection_builder_spark.pipeline.stages import (
         docker_correction_stage,
+        subprocess_correction_stage,
         write_fake_docker,
+        write_fixture_processor,
     )
 
-    fake = str(tmp_path / "docker")
-    write_fake_docker(fake)
-    log = fake + ".log"  # the shim logs `stop` calls beside itself
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     scenes = [f"S2A_SCENE_{i:03d}" for i in range(12)] + ["S2B_HANG_001"]
@@ -1074,10 +1053,21 @@ def test_docker_correction_stage_full_control_flow(spark, tmp_path):
         rows.append((sid, 1, str(p)))
     downloaded = spark.createDataFrame(
         rows, "scene_id string, collection_id int, compressed_file string")
-    out = docker_correction_stage(
-        downloaded, versions=["2.11.0", "2.10.0"],
-        out_dir=str(tmp_path / "out"), timeout=5.0,
-        docker_bin=fake).collect()
+    versions = ["2.11.0", "2.10.0"]
+    fake = str(tmp_path / "docker")
+    if processor == "docker":
+        write_fake_docker(fake)
+        out = docker_correction_stage(
+            downloaded, versions=versions,
+            out_dir=str(tmp_path / "out"), timeout=5.0,
+            docker_bin=fake).collect()
+    else:
+        script = str(tmp_path / "fixture_processor.py")
+        write_fixture_processor(script)
+        argv = [sys.executable, script, "{version}", "{input}", "{output}"]
+        out = subprocess_correction_stage(
+            downloaded, [(v, argv) for v in versions],
+            str(tmp_path / "out"), timeout=5.0).collect()
     assert len(out) == len(scenes)
     by_sid = {r.scene_id: r for r in out}
     # every scene must eventually succeed (2.10.0 is never broken)
@@ -1089,12 +1079,13 @@ def test_docker_correction_stage_full_control_flow(spark, tmp_path):
     for sid in scenes:
         expect = "2.10.0" if (sid in broken or "HANG" in sid) else "2.11.0"
         assert by_sid[sid].processor_version == expect, sid
-    # the hung container was stopped and retried on the next version
+    # the hung processor was stopped and retried on the next version
     hang = by_sid["S2B_HANG_001"]
     assert hang.timed_out_versions == 1
-    with open(log) as fh:
-        assert "stop S2B_HANG_001" in fh.read()
-    # output is the container's real work: byte-reversed input, md5'd
+    if processor == "docker":  # the shim logs `stop` calls beside itself
+        with open(fake + ".log") as fh:
+            assert "stop S2B_HANG_001" in fh.read()
+    # output is the processor's real work: byte-reversed input, md5'd
     for sid in scenes:
         want = hashlib.md5(f"{sid}|payload".encode()[::-1]).hexdigest()
         assert by_sid[sid].output_checksum == want, sid
