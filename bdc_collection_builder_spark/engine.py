@@ -25,7 +25,8 @@ operations on DataFrames instead of HTTP:
 | (worker chain download→…→post)                   | ``run_pipeline`` |
 
 All methods return DataFrames (the caller decides when to collect);
-nothing in the façade materializes data on the driver.
+nothing in the façade materializes data on the driver. ``run_pipeline``
+is the one method that materializes its batch, on the executors.
 """
 
 from __future__ import annotations
@@ -414,7 +415,13 @@ class CollectionBuilderEngine:
         (docker_versions). Either way the Spark plumbing, the publish
         MERGE, and the post-stage quality mask are identical; the post
         stage runs on a deterministic pixel grid per published scene
-        (the raster read is the documented rasterio seam)."""
+        (the raster read is the documented rasterio seam).
+
+        publish_stage materializes the batch of item rows once, on the
+        executors, before its MERGE; the MERGE and the returned post
+        stage read that batch, so each side-effecting stage runs once
+        per scene per ingest. Spark's ContextCleaner drops the batch's
+        blocks once the DataFrames that read it are garbage collected."""
         if http_providers is not None:
             import os as _os
 

@@ -176,7 +176,14 @@ def publish_stage(corrected: DataFrame, scenes: DataFrame, bands: DataFrame,
     """S15/Y3 — publish: build per-band assets (J7), flag COG targets
     (F11), attach tile + bbox, and MERGE items idempotently on
     (name, collection_id) (publish.py:575-605). All metadata work is
-    Catalyst; the item row is the reference's Item write."""
+    Catalyst; the item row is the reference's Item write.
+
+    The batch of item rows is materialized once on the executors
+    (``localCheckpoint(eager=True)``) before the MERGE, so the MERGE's
+    key and union sides, any CAS retry, the returned DataFrame and
+    whatever the caller builds on it all read the same rows: the
+    upstream stages, side effects included, run once per scene, and
+    the returned rows are the committed ones, ``updated`` included."""
     ok = corrected.filter(F.col("returncode") == 0)
     meta = scenes.select(
         "scene_id", "sensing_date", "cloud_cover", "tile",
@@ -226,6 +233,7 @@ def publish_stage(corrected: DataFrame, scenes: DataFrame, bands: DataFrame,
             F.current_timestamp().cast("timestamp_ntz").alias("updated"),
         )
         .dropDuplicates(["name", "collection_id"])
+        .localCheckpoint(eager=True)
     )
     store.merge_upsert("items", items)
     return items
@@ -333,15 +341,18 @@ def start_fixture_provider(flaky: bool = False,
     so failover behavior stays value-checkable end-to-end.
 
     Returns ``(base_url, server)``; the server runs on a daemon thread
-    until ``server.shutdown()``."""
+    until ``server.shutdown()``. ``server.hits`` counts the GETs per
+    scene id, served or not."""
     import hashlib
     import threading
+    from collections import Counter
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 — http.server API
             sid = self.path.strip("/")
             sid = sid[:-4] if sid.endswith(".zip") else sid
+            self.server.hits[sid] += 1
             if self.server.flaky and int(hashlib.md5(
                     f"{sid}:{offline_key}".encode()
                     ).hexdigest()[:2], 16) % 5 == 0:
@@ -360,6 +371,7 @@ def start_fixture_provider(flaky: bool = False,
 
     server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     server.flaky = flaky
+    server.hits = Counter()
     threading.Thread(target=server.serve_forever, daemon=True).start()
     return f"http://127.0.0.1:{server.server_address[1]}", server
 

@@ -240,6 +240,43 @@ def census_flagged(name: str, seconds: float) -> bool:
     return triage is None or seconds > 2 * triage[0]
 
 
+def fit_compact(compact: dict, spread: dict) -> None:
+    """Trim the compact bench line in place until its JSON fits 1980
+    chars. Trims run in a fixed order, each entry by entry:
+    ``noisy_min`` least-noisy entry first (the worst spreads are the
+    medians most in need of a replacement estimator), then the census
+    gate list from its end, and as the last resort the ``queries`` map,
+    noisiest entry first (its median is the least trustworthy); the
+    BASELINE proxies (``proxy_*``) are never trimmed. Spread ties break
+    on the name. Raises if even that cannot fit the budget."""
+
+    def size() -> int:
+        return len(json.dumps(compact, separators=(",", ":")))
+
+    def over() -> bool:
+        return size() > 1980
+
+    def noise(name: str) -> float:
+        return spread[name]["max"] / max(spread[name]["min"], 1e-9)
+
+    for name in sorted(compact["noisy_min"], key=lambda n: (noise(n), n)):
+        if not over():
+            break
+        del compact["noisy_min"][name]
+    census = compact.get("census_over5s", [])
+    while over() and census:
+        census.pop()
+    queries = [n for n in compact["queries"] if not n.startswith("proxy_")]
+    for name in sorted(queries, key=lambda n: (-noise(n), n)):
+        if not over():
+            break
+        del compact["queries"][name]
+    if over():
+        raise RuntimeError(
+            f"compact bench line is {size()} chars after trimming, over "
+            "the 1980-char budget: shorten the proxy keys")
+
+
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -514,11 +551,9 @@ def main(argv: list[str] | None = None) -> None:
     # BENCH_FULL.json (3-dp, everything, always) and (b) a short
     # "heavy" JSON line printed immediately BEFORE the compact line:
     # the driver parses only the last line, but its 2000-char tail
-    # still shows the heavy line on quiet runs. A length guard keeps
-    # the compact line itself under 1980 chars by trimming the
-    # least-noisy noisy_min entries first (the worst spreads are the
-    # medians most in need of a replacement estimator), and raises if
-    # trimming cannot bring it under the budget.
+    # still shows the heavy line on quiet runs. fit_compact keeps the
+    # compact line itself under 1980 chars, and raises if trimming
+    # cannot bring it under the budget.
     print(json.dumps(
         {"heavy": {n: round(t, 2) for n, t in heavy.items()}},
         separators=(",", ":")))
@@ -537,20 +572,7 @@ def main(argv: list[str] | None = None) -> None:
     if census_over5s:
         compact["census_over5s"] = census_over5s
 
-    def _clen() -> int:
-        return len(json.dumps(compact, separators=(",", ":")))
-
-    trim_order = sorted(
-        noisy_min,
-        key=lambda n: spread[n]["max"] / max(spread[n]["min"], 1e-9))
-    while _clen() > 1980 and trim_order:
-        compact["noisy_min"].pop(trim_order.pop(0))
-    while _clen() > 1980 and compact.get("census_over5s"):
-        compact["census_over5s"].pop()
-    if _clen() > 1980:
-        raise RuntimeError(
-            f"compact bench line is {_clen()} chars after trimming, over "
-            "the 1980-char budget: shorten the queries map")
+    fit_compact(compact, spread)
     print(json.dumps(compact, separators=(",", ":")))
     spark.stop()
 

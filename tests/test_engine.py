@@ -113,9 +113,13 @@ def test_full_pipeline_real_io(engine, spark, tmp_path):
     fixture providers with failover) into genuine child-process
     correction (exit-code version fallback) into the store's publish
     MERGE and the post-stage quality mask — no simulator anywhere in
-    the side-effecting path."""
+    the side-effecting path. Each side effect happens once per scene:
+    one GET per provider tried and one run per processor version
+    tried, across the MERGE and the caller's collect."""
+    import hashlib
     import os
     import sys
+    from collections import Counter
 
     from bdc_collection_builder_spark.pipeline.stages import (
         start_fixture_provider,
@@ -124,9 +128,11 @@ def test_full_pipeline_real_io(engine, spark, tmp_path):
 
     import datetime as dt
 
+    # RT_SCENE_14 is one the fixture processor's 2.11.0 fails on, so
+    # the version fallback runs too
     rows = [(f"RT_SCENE_{i:02d}", 2,
              dt.datetime(2024, 1, 1 + i), float(i * 7 % 100), "083095",
-             -46.0, -13.0, -45.0, -12.0) for i in range(8)]
+             -46.0, -13.0, -45.0, -12.0) for i in (*range(8), 14)]
     scenes = spark.createDataFrame(
         rows, "scene_id string, collection_id int, "
               "sensing_date timestamp, cloud_cover double, tile string, "
@@ -136,7 +142,20 @@ def test_full_pipeline_real_io(engine, spark, tmp_path):
     stable_url, stable_srv = start_fixture_provider(flaky=False)
     script = str(tmp_path / "fixture_processor.py")
     write_fixture_processor(script)
-    argv = [sys.executable, script, "{version}", "{input}", "{output}"]
+    # an argv wrapper that logs "<version> <scene>" per invocation,
+    # then runs the fixture processor
+    calls = str(tmp_path / "processor_calls.log")
+    wrapper = str(tmp_path / "logging_processor.py")
+    with open(wrapper, "w") as fh:
+        fh.write(
+            "import os, runpy, sys\n"
+            "log, script, version, inp = sys.argv[1:5]\n"
+            "with open(log, 'a') as fh:\n"
+            "    fh.write(version + ' ' + os.path.basename(inp)[:-4] + '\\n')\n"
+            "sys.argv = sys.argv[2:]\n"
+            "runpy.run_path(script, run_name='__main__')\n")
+    argv = [sys.executable, wrapper, calls, script,
+            "{version}", "{input}", "{output}"]
     try:
         quality = engine.run_pipeline(
             scenes,
@@ -160,16 +179,78 @@ def test_full_pipeline_real_io(engine, spark, tmp_path):
         with open(corrected, "rb") as fh:
             assert fh.read() == ((sid + "|") * 16).encode()[::-1], sid
 
+    def byte0(text):
+        return int(hashlib.md5(text.encode()).hexdigest()[:2], 16)
 
-def test_pipeline_plan_has_no_partitionless_window(engine, spark):
+    offline = {sid for sid in names if byte0(f"{sid}:flaky") % 5 == 0}
+    broken = {sid for sid in names if byte0(f"{sid}:2.11.0") % 7 == 0}
+    assert offline, "provider failover must exercise"
+    assert broken, "processor version fallback must exercise"
+    assert flaky_srv.hits == Counter(names)
+    assert stable_srv.hits == Counter(offline)
+    with open(calls) as fh:
+        runs = Counter(tuple(line.split()) for line in fh)
+    assert runs == Counter([("2.11.0", sid) for sid in names]
+                           + [("2.5.5", sid) for sid in broken])
+
+
+def test_pipeline_plan_has_no_partitionless_window(engine, spark,
+                                                  monkeypatch):
     """The facade pipeline must not contain a global-order window (a
-    single-task sort at scale): the pixel grid is hash-seeded, not
-    ordinal-indexed."""
+    single-task sort at scale). The plan of the ``run_pipeline`` result
+    stops at the publish batch, which publish materializes, so it
+    covers the post stage and its hash-seeded (not ordinal-indexed)
+    pixel grid. The batch's own plan, taken as publish materializes
+    it, covers download, correction and publish."""
     q = _query()
     scenes = (engine.radcor_preview(q).withColumn("collection_id", F.lit(1)))
+    batches = []
+    checkpoint = type(scenes).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        batches.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(scenes), "localCheckpoint", spy)
     plan = engine.run_pipeline(scenes)._jdf.queryExecution().executedPlan() \
         .toString()
+    assert len(batches) == 1, "publish materializes exactly one batch"
+    assert "Window" not in batches[0], "window operator in publish batch"
     assert "Window" not in plan, "unexpected window operator in pipeline plan"
+
+
+def test_ingest_batches_do_not_pile_up(engine, spark):
+    """An ingest's materialized publish batch lives as long as the
+    DataFrames that read it: once they are garbage collected (py4j's
+    proxies sit in reference cycles, so in Python that takes the cyclic
+    collector, then in the JVM), Spark's ContextCleaner drops its
+    blocks, so consecutive ingests in one session do not pile up."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    held = []
+    for _ in range(3):
+        scenes = (engine.radcor_preview(_query(force=True))
+                  .withColumn("collection_id", F.lit(1)))
+        quality = engine.run_pipeline(scenes)
+        assert quality.collect()
+        held.append(cached_rdds() - before)
+        del quality, scenes
+        for _ in range(60):
+            gc.collect()
+            sc._jvm.System.gc()
+            if not cached_rdds() - before:
+                break
+            time.sleep(0.5)
+        assert not cached_rdds() - before, "batch outlived its DataFrames"
+    assert all(len(ids) == 1 for ids in held), held
+    assert len(set().union(*held)) == 3, held
 
 
 def test_salted_join_matches_plain(spark):

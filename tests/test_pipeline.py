@@ -131,6 +131,11 @@ def test_stage_flow_end_to_end(spark, fixtures, store):
     assert pub
     sample_assets = pub[0].assets
     assert "B04" in sample_assets and "NDVI" in sample_assets
+    # publish returns the rows it committed, ``updated`` included
+    committed = store.read("items").filter(
+        F.col("name").isin(*[r.name for r in pub])).collect()
+    assert {r.name: r.asDict() for r in committed} == \
+        {r.name: r.asDict() for r in pub}
     # idempotent re-publish (Y3): same keys, items count stable
     n_items = store.read("items").count()
     publish_stage(corrected, scenes_meta.withColumn("collection_id", F.lit(1)),
