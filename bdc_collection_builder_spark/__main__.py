@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from contextlib import contextmanager
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -166,6 +167,17 @@ def _engine_for(store_root: str):
     return CollectionBuilderEngine(spark, CatalogStore(spark, store_root)), spark
 
 
+@contextmanager
+def _engine(store_root: str):
+    """An engine over the store at ``store_root``; its Spark session
+    stops when the block exits."""
+    engine, spark = _engine_for(store_root)
+    try:
+        yield engine
+    finally:
+        spark.stop()
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     if args.command is None:
@@ -211,16 +223,13 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         credentials = (args.credentials if args.credentials else
                        {"username": args.username, "password": args.password})
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             created = engine.create_provider(
                 args.name, driver_name=args.driver_name,
                 description=args.description, url=args.url,
                 credentials=credentials)
             print(f"Provider {args.name} "
                   f"{'created' if created else 'skipped.'}")
-        finally:
-            spark.stop()
         return 0
 
     if args.command == "load-providers":
@@ -236,8 +245,7 @@ def main(argv: list[str] | None = None) -> int:
             print("Missing --ifile or --from-dir parameter.",
                   file=sys.stderr)
             return 2
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             for entry in entries:
                 data = json.loads(entry.read_text())
                 credentials = data.pop("credentials", {})
@@ -246,20 +254,15 @@ def main(argv: list[str] | None = None) -> int:
                 msg = ("created" if created
                        else "updated" if args.update else "skipped")
                 print(f"Provider {data['name']} {msg}")
-        finally:
-            spark.stop()
         return 0
 
     if args.command == "set-provider":
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             engine.set_provider(
                 args.collection, args.provider, priority=args.priority,
                 disable=args.disable, remove=args.remove)
             verb = "removed" if args.remove else "updated"
             print(f"Collection Provider {args.collection} {verb}")
-        finally:
-            spark.stop()
         return 0
 
     if args.command == "delete-rows":
@@ -267,18 +270,16 @@ def main(argv: list[str] | None = None) -> int:
             ConstraintViolation,
         )
 
-        engine, spark = _engine_for(args.store)
-        try:
-            before = engine.store.read(args.table).count()
-            engine.store.delete_where(args.table, args.where)
-            after = engine.store.read(args.table).count()
-            print(f"Deleted {before - after} row(s) from {args.table}")
-        except ConstraintViolation as exc:
-            # the DB's FK error at the prompt: message + nonzero exit
-            print(str(exc), file=sys.stderr)
-            return 1
-        finally:
-            spark.stop()
+        with _engine(args.store) as engine:
+            try:
+                before = engine.store.read(args.table).count()
+                engine.store.delete_where(args.table, args.where)
+                after = engine.store.read(args.table).count()
+                print(f"Deleted {before - after} row(s) from {args.table}")
+            except ConstraintViolation as exc:
+                # the DB's FK error at the prompt: message + nonzero exit
+                print(str(exc), file=sys.stderr)
+                return 1
         return 0
 
     if args.command == "delete-keys":
@@ -286,34 +287,30 @@ def main(argv: list[str] | None = None) -> int:
             ConstraintViolation,
         )
 
-        engine, spark = _engine_for(args.store)
-        try:
-            keys = spark.read.parquet(args.keys)
-            key_cols = [c.strip() for c in args.key_cols.split(",")
-                        if c.strip()] or None
-            before = engine.store.read(args.table).count()
-            engine.store.delete_keys(args.table, keys, key_cols)
-            after = engine.store.read(args.table).count()
-            print(f"Deleted {before - after} row(s) from {args.table}")
-        except ConstraintViolation as exc:
-            print(str(exc), file=sys.stderr)
-            return 1
-        finally:
-            spark.stop()
+        with _engine(args.store) as engine:
+            try:
+                keys = engine.spark.read.parquet(args.keys)
+                key_cols = [c.strip() for c in args.key_cols.split(",")
+                            if c.strip()] or None
+                before = engine.store.read(args.table).count()
+                engine.store.delete_keys(args.table, keys, key_cols)
+                after = engine.store.read(args.table).count()
+                print(f"Deleted {before - after} row(s) from {args.table}")
+            except ConstraintViolation as exc:
+                print(str(exc), file=sys.stderr)
+                return 1
         return 0
 
     if args.command == "vacuum":
-        engine, spark = _engine_for(args.store)
-        try:
-            removed = engine.store.vacuum(args.table,
-                                          keep_last=args.keep_last)
-            print(f"Vacuumed {len(removed)} generation(s) from "
-                  f"{args.table}")
-        except ValueError as exc:
-            print(str(exc), file=sys.stderr)
-            return 2
-        finally:
-            spark.stop()
+        with _engine(args.store) as engine:
+            try:
+                removed = engine.store.vacuum(args.table,
+                                              keep_last=args.keep_last)
+                print(f"Vacuumed {len(removed)} generation(s) from "
+                      f"{args.table}")
+            except ValueError as exc:
+                print(str(exc), file=sys.stderr)
+                return 2
         return 0
 
     if args.command == "update-rows":
@@ -325,13 +322,10 @@ def main(argv: list[str] | None = None) -> int:
                 return 2
             col, expr = item.split("=", 1)
             assignments[col.strip()] = expr
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             engine.store.update_where(args.table, args.where, assignments)
             print(f"Updated {args.table} "
                   f"({', '.join(assignments)}) where {args.where}")
-        finally:
-            spark.stop()
         return 0
 
     if args.command == "set-constraints":
@@ -340,38 +334,32 @@ def main(argv: list[str] | None = None) -> int:
         except ValueError as exc:
             print(str(exc), file=sys.stderr)
             return 2
-        engine, spark = _engine_for(args.store)
-        try:
-            engine.store.set_constraints(
-                args.table,
-                not_null=[c.strip() for c in args.not_null.split(",")
-                          if c.strip()],
-                unique=[[c.strip() for c in u.split(",")]
-                        for u in args.unique],
-                check=args.check,
-                foreign_keys=fks)
-            print(f"Constraints set on {args.table}")
-        except Exception as exc:  # violation or unknown column
-            print(str(exc), file=sys.stderr)
-            return 1
-        finally:
-            spark.stop()
+        with _engine(args.store) as engine:
+            try:
+                engine.store.set_constraints(
+                    args.table,
+                    not_null=[c.strip() for c in args.not_null.split(",")
+                              if c.strip()],
+                    unique=[[c.strip() for c in u.split(",")]
+                            for u in args.unique],
+                    check=args.check,
+                    foreign_keys=fks)
+                print(f"Constraints set on {args.table}")
+            except Exception as exc:  # violation or unknown column
+                print(str(exc), file=sys.stderr)
+                return 1
         return 0
 
     if args.command == "show-constraints":
         import json
 
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             print(json.dumps(engine.store.constraints(args.table),
                              indent=2, sort_keys=True))
-        finally:
-            spark.stop()
         return 0
 
     if args.command == "overview":
-        engine, spark = _engine_for(args.store)
-        try:
+        with _engine(args.store) as engine:
             info = engine.collection_overview(args.collection)
             print(f"Collection {info.get('identifier') or info['name']}")
             for prop in ("title", "name", "version", "collection_type"):
@@ -381,8 +369,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"  - {entry['name']}, driver={entry['driver']}, "
                       f"priority={entry['priority']}, "
                       f"active={entry['active']}")
-        finally:
-            spark.stop()
         return 0
 
     return 0

@@ -170,16 +170,6 @@ def minhash_signatures_from_shingles(sh: DataFrame, n_hashes: int = 32,
     )
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 5,
-                       n_hashes: int = 32,
-                       base_hash: str = "xxhash64") -> DataFrame:
-    """MinHash signature per document (see
-    :func:`minhash_signatures_from_shingles`)."""
-    return minhash_signatures_from_shingles(
-        shingles(docs, text_col, id_col, k), n_hashes, base_hash)
-
-
 def lsh_candidates(sig: DataFrame, bands: int, rows_per_band: int,
                    engine_neutral: bool = False) -> DataFrame:
     """Banded LSH candidate pairs (doc_a < doc_b) from a (doc_id,

@@ -39,27 +39,6 @@ def skip_published(candidates: DataFrame, items: DataFrame,
     return candidates.join(items.select(*keys).distinct(), keys, "left_anti")
 
 
-def already_published(candidates: DataFrame, items: DataFrame,
-                      keys: list[str]) -> DataFrame:
-    """J4 (semi variant) — scenes that already have a published item."""
-    return candidates.join(items.select(*keys).distinct(), keys, "left_semi")
-
-
-def latest_failed_count(history: DataFrame, scene_col: str = "sceneid",
-                        ts_col: str = "start", status_col: str = "status") -> DataFrame:
-    """J5/W2 — greatest-per-group without the reference's join-back CTE
-    (controller.py:479-495): one ranking window, then filter. The window
-    shuffles once on scene_id; no second pass over the table."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(scene_col).orderBy(F.col(ts_col).desc())
-    return (
-        history.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col(status_col) != "SUCCESS"))
-        .drop("__rn")
-    )
-
-
 def lineage_descendants(edges: DataFrame, roots: DataFrame, max_depth: int = 3,
                         src: str = "parent_id", dst: str = "child_id",
                         root_col: str = "id") -> DataFrame:

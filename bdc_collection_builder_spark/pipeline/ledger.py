@@ -69,32 +69,6 @@ def dispatch_activities(store: CatalogStore, scenes: DataFrame,
         & (F.col("activity_type") == activity_type))
 
 
-def merge_activity_args(activities: DataFrame, updates: DataFrame,
-                        key: str = "sceneid") -> DataFrame:
-    """X18 — shallow-merge per-scene arg updates into the args JSON
-    (tasks.py:86-89): parse → map_concat (update wins) → re-encode."""
-    upd = updates.select(F.col(key),
-                         F.col("arg_updates").alias("__upd"))
-    merged = (
-        activities.join(upd, key, "left")
-        .withColumn(
-            "args",
-            F.when(F.col("__upd").isNull(), F.col("args")).otherwise(
-                F.to_json(F.map_concat(
-                    F.map_filter(
-                        F.from_json("args", "map<string,string>"),
-                        lambda k, _: ~F.array_contains(
-                            F.map_keys(F.from_json("__upd", "map<string,string>")), k),
-                    ),
-                    F.from_json("__upd", "map<string,string>"),
-                ))
-            ),
-        )
-        .drop("__upd")
-    )
-    return merged
-
-
 def record_attempts(store: CatalogStore, attempts: DataFrame) -> None:
     """Append execution attempts: one tasks row + one history link per
     attempt (create_execution semantics, tasks.py:45-93)."""

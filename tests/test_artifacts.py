@@ -81,3 +81,40 @@ def test_census_has_no_untriaged_tail():
     # registered-after-the-bench-run queries are legitimate gaps only
     # until the next closing bench; flag everything else
     assert not missing, missing
+
+
+def test_no_unreferenced_package_helpers():
+    """Every module-level function or class of the package is named
+    somewhere besides its own ``def``: in another module, a test, a
+    script or the benchmark. A helper nothing calls is dead code that
+    still reads as a supported path (a stale copy of a ranking, a
+    wrapper with no caller), so it fails here instead of lingering.
+    Decorated definitions (registered queries) and dunders are exempt:
+    a registry or the interpreter reaches them without naming them."""
+    import ast
+    import collections
+    import re
+
+    words = collections.Counter()
+    sources = []
+    for dirpath, dirs, files in os.walk(ROOT):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path) as fh:
+                    text = fh.read()
+                words.update(re.findall(r"\w+", text))
+                sources.append((path, text))
+    package = os.path.join(ROOT, "bdc_collection_builder_spark") + os.sep
+    dead = [
+        f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}"
+        for path, text in sources if path.startswith(package)
+        for node in ast.parse(text).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef))
+        and not node.decorator_list
+        and not (node.name.startswith("__") and node.name.endswith("__"))
+        and words[node.name] <= 1
+    ]
+    assert not dead, dead

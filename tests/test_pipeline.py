@@ -445,6 +445,33 @@ def test_store_optimize_compacts_without_changing_data(spark, tmp_path,
     assert sorted(map(tuple, s.read("items").collect())) == before
 
 
+def test_store_optimize_keeps_concurrent_append(spark, tmp_path, fixtures):
+    """OPTIMIZE rewrites the snapshot it read, so a commit landing
+    between that read and its flip must not be erased: the flip is a
+    CAS against the read generation and the rewrite re-derives from
+    the new one."""
+    root = str(tmp_path / "opt_race")
+    s = CatalogStore(spark, root)
+    s.overwrite("items", fixtures["items"].limit(5))
+    real_flip = s._flip
+    raced = {}
+
+    def racing_flip(table, gen, *args, **kwargs):
+        if not raced:
+            raced["gen"] = gen
+            CatalogStore(spark, root).append(
+                "items", fixtures["items"].filter(F.col("id") > 40).limit(1))
+        return real_flip(table, gen, *args, **kwargs)
+
+    s._flip = racing_flip
+    try:
+        s.optimize("items")
+    finally:
+        del s._flip
+    assert raced, "race window was not exercised"
+    assert s.read("items").count() == 6
+
+
 @pytest.mark.slow  # >8s e2e pin: round-close gate (--runslow)
 def test_partitioned_store_optimize_per_partition(spark, tmp_path,
                                                   fixtures):
@@ -804,6 +831,40 @@ def test_staged_gen_survives_concurrent_vacuum(spark, tmp_path, fixtures):
         s._stage = real_stage
     assert seen, "race window was not exercised"
     assert s.read("items").count() == 30
+
+
+def test_overwrite_staged_gen_survives_retention_horizon(spark, tmp_path,
+                                                        fixtures):
+    """An overwrite whose finished staged generation falls behind the
+    retention horizon before its flip must still land: another
+    store's commits vacuum every generation older than their last
+    ``keep_generations``, so an unpinned staged dir would be collected
+    and the unconditional flip would point ``_CURRENT`` at a missing
+    directory. Overwrite stays last-writer-wins."""
+    from bdc_collection_builder_spark.catalog.store import CatalogStore
+
+    root = str(tmp_path / "ow_horizon")
+    a = CatalogStore(spark, root)
+    a.overwrite("items", fixtures["items"].limit(5))
+    real_flip = a._flip
+    raced = {}
+
+    def racing_flip(table, gen, *args, **kwargs):
+        if not raced:
+            raced["gen"] = gen
+            b = CatalogStore(spark, root)
+            for _ in range(b.keep_generations):
+                b.append("items", fixtures["items"].limit(1))
+        return real_flip(table, gen, *args, **kwargs)
+
+    a._flip = racing_flip
+    try:
+        a.overwrite("items", fixtures["items"].limit(7))
+    finally:
+        del a._flip
+    assert raced, "race window was not exercised"
+    assert a._current_gen("items") == raced["gen"]
+    assert a.read("items").count() == 7
 
 
 def test_vacuum_skips_temporary_even_unpinned(spark, tmp_path, fixtures):
