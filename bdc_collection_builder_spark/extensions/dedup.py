@@ -580,9 +580,12 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
       of u's closed neighborhood;
     - small-star: every neighbor v ≤ u re-points to m(u).
 
-    Converged when the edge multiset stops changing; the result maps
-    every node to its component minimum, exactly like the propagation
-    variant (equivalence is pytest-pinned on random graphs)."""
+    A state is a fixpoint exactly when it is a star forest: every node
+    that has a smaller neighbor has exactly one neighbor, so each
+    component is its minimum plus leaves. The loop stops at the first
+    such state; the result maps every node to its component minimum,
+    exactly like the propagation variant (equivalence is pytest-pinned
+    on random graphs)."""
     both = (
         edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
@@ -612,32 +615,20 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
                                     F.col("u").alias("v"))).distinct()
 
     def contract(e: DataFrame, _i: int) -> DataFrame:
-        # Per-star materialization is LOAD-BEARING, not just lineage
-        # hygiene: star() consumes its input twice (the mins groupBy
-        # and the half filter), so an unmaterialized large-star output
-        # would replay its whole plan per consumer. Fusing the two
-        # stars into one materialized round was measured in round 10
-        # (same-session A/B at sf0.1): neutral-to-worse
-        # (dd_survivorship warm 5.5s -> 6.3s) — keep the checkpoint
-        # (iterate() takes the small-star one).
+        # The large-star checkpoint is load-bearing: star() reads its
+        # input twice (the mins groupBy and the half filter), so an
+        # unmaterialized large-star output would replay its plan per
+        # reader (iterate() takes the small-star one).
         return star(star(e, large=True).localCheckpoint(eager=True),
                     large=False)
 
-    prev_count = both.count()
-
     def changed(e: DataFrame) -> bool:
-        nonlocal prev_count
-        n = e.count()
-        # converged when the rewrite is a fixpoint: every node already
-        # points at its component min, so the edge set is the star
-        # itself and stops changing
-        if n == prev_count:
-            # one extra confirmation pass guards count collisions
-            again = star(star(e, True), False)
-            if again.exceptAll(e).limit(1).count() == 0:
-                return False
-        prev_count = n
-        return True
+        # not yet a star forest: some node has a smaller neighbor and
+        # more than one neighbor
+        return (e.groupBy("u")
+                .agg(F.min("v").alias("mv"), F.count("*").alias("deg"))
+                .filter((F.col("mv") < F.col("u")) & (F.col("deg") > 1))
+                .limit(1).count() > 0)
 
     e = iterate(both, contract, max_iter, checkpoint_every=1,
                 changed=changed)

@@ -1235,6 +1235,7 @@ def st_incremental_near_dedup(spark, sf_dir):
 
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
+        drain_partitions,
         incremental_near_dedup,
     )
 
@@ -1258,20 +1259,11 @@ def st_incremental_near_dedup(spark, sf_dir):
      .select((F.col("doc_id") + 1000000).alias("doc_id"),
              F.concat("text", F.lit(" xy zz wq")).alias("text"))
      .coalesce(1).write.mode("append").parquet(f"{scratch}/in"))
-    # See st_stream_stream_join: each micro-batch runs several joins,
-    # distincts and three idempotent-append actions over a batch-sized
-    # frame; at this batch keyspace 8 shuffle partitions suffice —
-    # production sizes the per-batch shuffle to batch volume, not the
-    # relational default.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with drain_partitions(spark):
         q = incremental_near_dedup(spark, f"{scratch}/in",
                                    f"{scratch}/state",
                                    f"{scratch}/out", f"{scratch}/ckpt")
         q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return (
         spark.read.parquet(f"{scratch}/out")
         .select((F.col("doc_id") % 1000000).alias("cluster_rep"))
@@ -1310,6 +1302,7 @@ def st_stream_stream_join(spark, sf_dir):
 
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
+        drain_partitions,
         streaming_interval_join,
     )
 
@@ -1318,18 +1311,10 @@ def st_stream_stream_join(spark, sf_dir):
     load_table(spark, sf_dir, "events").coalesce(8).write.mode(
         "overwrite").parquet(events_dir)
     qname = f"ssj_{uuid.uuid4().hex[:8]}"
-    # State-store cost scales with partition count x micro-batches
-    # (commit files per partition per batch); at this keyspace 8
-    # partitions more than suffice — production sizes this to key
-    # cardinality, not the relational shuffle default.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with drain_partitions(spark):
         q = streaming_interval_join(spark, events_dir, events_dir,
                                     f"{scratch}/ckpt", qname)
         q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.sql(f"SELECT error_id, followup_id FROM {qname}")
 
 
@@ -2718,6 +2703,7 @@ def st_stream_outer_join(spark, sf_dir):
 
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
+        drain_partitions,
         streaming_interval_join_left,
     )
 
@@ -2726,17 +2712,10 @@ def st_stream_outer_join(spark, sf_dir):
     load_table(spark, sf_dir, "events").coalesce(8).write.mode(
         "overwrite").parquet(events_dir)
     qname = f"ssjl_{uuid.uuid4().hex[:8]}"
-    # See st_stream_stream_join: size state partitions to the
-    # keyspace (8 here), not the relational shuffle default — the
-    # no-data eviction batch pays per state partition.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with drain_partitions(spark):
         q = streaming_interval_join_left(spark, events_dir, events_dir,
                                          f"{scratch}/ckpt", qname)
         q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.sql(f"SELECT error_id, followup_id FROM {qname}")
 
 
@@ -3283,6 +3262,7 @@ def st_stream_static_enrich(spark, sf_dir):
 
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
+        drain_partitions,
         streaming_static_enrich,
     )
 
@@ -3296,14 +3276,10 @@ def st_stream_static_enrich(spark, sf_dir):
            .select(F.col("n_nationkey").cast("int").alias("nkey"),
                    F.col("n_name").alias("region_name")))
     qname = f"sse_{uuid.uuid4().hex[:8]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with drain_partitions(spark):
         q = streaming_static_enrich(spark, events_dir, dim,
                                     f"{scratch}/ckpt", qname)
         q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return (
         spark.sql(f"SELECT region_name, cents FROM {qname}")
         .groupBy("region_name")

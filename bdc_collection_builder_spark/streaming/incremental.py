@@ -20,6 +20,8 @@ restart loses nothing.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +34,33 @@ from bdc_collection_builder_spark.catalog.store import CatalogStore
 # normalizes bigint/timestamp_ntz ts variants).
 EVENTS_STREAM_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                         "event_type string, value double, props string")
+
+
+@contextmanager
+def drain_partitions(spark: SparkSession):
+    """Run a drain with ``spark.sql.shuffle.partitions`` set to
+    ``min(8, defaultParallelism)``, restoring the previous value on
+    exit, including when the body raises.
+
+    Each micro-batch of a drain runs its joins, distincts and state
+    store over a batch-sized frame, and state-store cost scales with
+    partitions x micro-batches: every state partition commits its
+    files each batch, and the no-data eviction batch pays per
+    partition too. At the registry's batch keyspaces 8 partitions
+    suffice; capping them at the cores keeps each batch's commits in
+    one wave of tasks. Production sizes this to key cardinality and
+    batch volume, not the relational shuffle default. Start and await
+    the drain inside the block: stateful operators fix their partition
+    count into the checkpoint at the first batch, and ``foreachBatch``
+    bodies read the setting as each batch runs.
+    """
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(min(8, spark.sparkContext.defaultParallelism)))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def incremental_publish(spark: SparkSession, incoming_dir: str,

@@ -82,18 +82,7 @@ BENCH_QUERIES = [
     # round-4 fourth-wave additions
     "j22_bilateral_trade_flow",  # Q7 shape (5-way star, nation-pair prune)
     "j20_last_shipper_waiting",  # Q21 shape (decorrelated to one window)
-    "st_stream_outer_join",      # watermarked outer-join state eviction.
-                                 # r9's +0.30s (2.50->2.80) flag was
-                                 # settled in round 10 (VERDICT-r9
-                                 # task 4): the r8->r9 code diff is
-                                 # byte-identical except scratch-dir
-                                 # provenance, and an 8-run same-
-                                 # session measurement landed 2.81-
-                                 # 2.99s (median 2.95) — both round
-                                 # values sit inside the machine's
-                                 # day-to-day band. Verdict: harness
-                                 # noise, plan unchanged; the r4
-                                 # 8-partition state sizing stands.
+    "st_stream_outer_join",      # watermarked outer-join state eviction
     "dq_gini_concentration",     # rank-identity Gini (window, no self-join)
     "tk_bpe_train_rounds",       # 3 chained BPE merge rounds
     "ss_kmeans_train_rounds",    # 2 Lloyd rounds, fixed-point updates
@@ -156,14 +145,7 @@ HEAVY_QUERIES = [
     # dd_exact_substring_maxlen and tj_resample_interpolate graduated
     # to BENCH_QUERIES in round 11 (VERDICT-r10 task 6) after the
     # round-10 rewrites brought them to/under the 5s bar.
-    "dd_cluster_components_star", # promoted by the round-10 closing
-                                  # census: data-scale star-contraction
-                                  # CC (quiet-day ~3.7s, floors ~5.4s
-                                  # on the degraded closing-bench
-                                  # machine); heavy membership gives
-                                  # the tail round-over-round tracking
-                                  # instead of a census triage that
-                                  # re-fires every slow day.
+    "dd_cluster_components_star", # star-contraction CC, a borderline-5s tail
     "dd_survivorship",            # promoted by the round-10 CLOSING
                                   # census: quiet-day warm median
                                   # ~4.3s after the score-after-join

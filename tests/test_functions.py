@@ -304,6 +304,66 @@ def test_star_cc_matches_propagation(spark, sf_dir):
         labels(connected_components(pairs))
 
 
+def test_star_cc_stops_at_star_forest(spark, monkeypatch):
+    """Star contraction labels every node with its component minimum
+    (checked against a Python union-find) and stops at the first state
+    that is a star forest: every node with a smaller neighbor has
+    exactly one neighbor. The deep 0-60 chain converges within 8
+    rounds."""
+    import random
+
+    from bdc_collection_builder_spark.extensions import dedup
+    from bdc_collection_builder_spark.functions import iterate as it
+
+    finals = []
+
+    def spy(*args, **kwargs):
+        finals.append(it.iterate(*args, **kwargs))
+        return finals[-1]
+
+    monkeypatch.setattr(dedup, "iterate", spy)
+
+    def component_mins(edges):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return {(x, find(x)) for x in parent}
+
+    def is_star_forest(state):
+        nbrs = {}
+        for r in state.collect():
+            nbrs.setdefault(r.u, []).append(r.v)
+        return all(len(vs) == 1 for u, vs in nbrs.items() if min(vs) < u)
+
+    rng = random.Random(7)
+    graphs = [([(i, i + 1) for i in range(60)], 8)]
+    for _ in range(20):
+        n = rng.randint(2, 12)
+        graphs.append(([(rng.randrange(n), rng.randrange(n))
+                        for _ in range(rng.randint(1, 15))], 20))
+    for edges, max_iter in graphs:
+        edges = [(a, b) for a, b in edges if a != b]
+        if not edges:
+            continue
+        edf = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        it.reset()
+        got = {(r.doc_id, r.component_id) for r in
+               dedup.connected_components_star(edf, max_iter=max_iter)
+               .collect()}
+        assert got == component_mins(edges)
+        assert it.taken() < max_iter, "stopped by the cap, not the test"
+        assert is_star_forest(finals[-1])
+
+
 def test_multimodal_decode_plumbing(spark):
     from bdc_collection_builder_spark.extensions.multimodal import (
         decode_image_features,

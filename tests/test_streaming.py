@@ -821,3 +821,27 @@ def test_static_enrich_equals_batch_and_is_exactly_once(spark, tmp_path):
     q4.awaitTermination(120)
     assert sink_rows() == want | {
         (1000 + i, f"region-{i % 25}", 500) for i in range(5)}
+
+
+def test_drain_partitions_caps_at_cores_and_restores(spark):
+    """The drain helper sets the shuffle partitions to
+    min(8, defaultParallelism) inside the block and restores the
+    previous value on exit, also when the body raises."""
+    from bdc_collection_builder_spark.streaming.incremental import (
+        drain_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        with drain_partitions(spark):
+            assert spark.conf.get(key) == str(
+                min(8, spark.sparkContext.defaultParallelism))
+        assert spark.conf.get(key) == "37"
+        with pytest.raises(RuntimeError):
+            with drain_partitions(spark):
+                raise RuntimeError("drain failed")
+        assert spark.conf.get(key) == "37"
+    finally:
+        spark.conf.set(key, before)
