@@ -1795,16 +1795,21 @@ class PartitionedCatalogStore(CatalogStore):
                     continue
                 value_str = d.split("=", 1)[1]
                 sub = self._sub(table, value_str)
-                os.makedirs(sub.path(table), exist_ok=True)
-                os.replace(os.path.join(staging, d),
-                           os.path.join(sub.path(table), gen))
-                if evolved:
-                    # schema versioned WITH the partition's snapshot —
-                    # sub._gen_schema picks this up on every read
-                    with open(os.path.join(sub.path(table), gen,
-                                           "_SCHEMA.json"), "w") as fh:
-                        fh.write(out_schema.json())
+                # pinned before it lands in the partition, like every
+                # flat commit's _stage_pinned: the moved dir keeps its
+                # staging mtime, so a vacuum racing the flip would
+                # otherwise collect it and the CAS would still succeed
+                sub._protect(table, gen)
                 try:
+                    os.replace(os.path.join(staging, d),
+                               os.path.join(sub.path(table), gen))
+                    if evolved:
+                        # schema versioned WITH the partition's
+                        # snapshot — sub._gen_schema picks this up on
+                        # every read
+                        with open(os.path.join(sub.path(table), gen,
+                                               "_SCHEMA.json"), "w") as fh:
+                            fh.write(out_schema.json())
                     sub._flip(table, gen, expected=base_gens.get(value_str))
                 except CommitConflict:
                     # this partition moved mid-merge: drop our stale
@@ -1820,6 +1825,8 @@ class PartitionedCatalogStore(CatalogStore):
                         self._merged(table, base, inc, keys,
                                      evolve=evolve_schema),
                         keep_extra=True)
+                finally:
+                    sub._unprotect(table, gen)
         finally:
             for sub, g in pinned_subs:
                 sub._unprotect(table, g)

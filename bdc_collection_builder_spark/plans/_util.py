@@ -1,4 +1,16 @@
-"""Shared helpers for plan modules."""
+"""Shared helpers for plan modules.
+
+Each registry input that several queries read is built in one place:
+
+- :func:`t` loads a benchmark table; :func:`duck_ts` is the oracle's
+  matching ``events.ts`` normalization;
+- :func:`_scene_files` writes the synthetic 4-scene pixel grid as real
+  HDF4, GeoTIFF or PNG files, one directory per kind and process;
+- ``plans/extensions._aug_corpus`` is the planted near-dup corpus,
+  beside its oracle twin ``_AUG_SQL``;
+- ``plans/sources._orders_as_items`` projects ``orders`` into the
+  catalog ``items`` schema, the seed of the store queries.
+"""
 
 from __future__ import annotations
 
@@ -55,3 +67,51 @@ def scratch_dir(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+_SCENE_DIRS: dict[str, str] = {}
+
+
+def _scene_files(spark: SparkSession, kind: str, ext: str, encode,
+                 px: DataFrame | None = None) -> str:
+    """Write the synthetic 4-scene 16×16 pixel grid as one REAL file
+    per scene, ``scene_<id>.<ext>``, once per process and ``kind``, and
+    return the directory. The writes happen executor-side inside
+    ``applyInPandas``: each scene group encodes and writes its own
+    file (the distributed sink shape). ``encode(sid, grids) -> bytes``
+    gets the scene's columns as 16×16 arrays in (y, x) order, keyed by
+    name. ``px`` is a frame derived from the grid to write instead of
+    the grid itself. On a cluster the files land on shared storage;
+    locally in a scratch dir."""
+    if kind not in _SCENE_DIRS:
+        import os
+
+        import pandas as pd
+
+        from bdc_collection_builder_spark.functions.pixel import (
+            synthetic_pixels,
+        )
+
+        out = scratch_dir(f"bdc_{kind}_scenes_")
+        if px is None:
+            px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
+
+        def write_group(key, pdf):
+            sid = int(key[0])
+            pdf = pdf.sort_values(["y", "x"])
+            grids = {c: pdf[c].to_numpy().reshape(16, 16)
+                     for c in pdf.columns if c not in ("scene_id", "y", "x")}
+            path = os.path.join(out, f"scene_{sid}.{ext}")
+            with open(path, "wb") as fh:
+                fh.write(encode(sid, grids))
+            return pd.DataFrame({"scene_id": [sid], "path": [path]})
+
+        # count() is the action that runs the lazy sink: it must stay a
+        # statement, never an assert that `python -O` strips
+        written = px.groupBy("scene_id").applyInPandas(
+            write_group, "scene_id long, path string").count()
+        if written != 4:
+            raise RuntimeError(
+                f"{kind}: wrote {written} scene files, expected 4")
+        _SCENE_DIRS[kind] = out
+    return _SCENE_DIRS[kind]

@@ -63,6 +63,20 @@ _AUG_SQL = """
 """
 
 
+def _aug_corpus(spark, sf_dir) -> DataFrame:
+    """Spark twin of ``_AUG_SQL``, the planted near-dup corpus: every
+    5th document plus an ``id + 1000000`` copy of every 20th with
+    ``' xy zz wq'`` appended."""
+    docs = t(spark, sf_dir, "documents")
+    near = (
+        docs.filter(F.col("doc_id") % 20 == 0)
+        .select((F.col("doc_id") + 1000000).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
+    )
+    return (docs.select("doc_id", "text").filter(F.col("doc_id") % 5 == 0)
+            .unionByName(near))
+
+
 # Shared CTE chain: exact 5-gram Jaccard pairs over the augmented
 # corpus — the jaccard query selects from it directly; the cluster
 # query builds its component closure on top.
@@ -111,14 +125,7 @@ def dd_ngram_jaccard_pairs(spark, sf_dir):
     (every 20th doc gets a slightly-extended copy → true near-dups)."""
     from bdc_collection_builder_spark.extensions.dedup import ngram_jaccard_pairs
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    return ngram_jaccard_pairs(docs.unionByName(near), threshold=0.5)
+    return ngram_jaccard_pairs(_aug_corpus(spark, sf_dir), threshold=0.5)
 
 
 @query(
@@ -152,14 +159,7 @@ def dd_cluster_components(spark, sf_dir):
         ngram_jaccard_pairs,
     )
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    pairs = ngram_jaccard_pairs(docs.unionByName(near), threshold=0.5)
+    pairs = ngram_jaccard_pairs(_aug_corpus(spark, sf_dir), threshold=0.5)
     return connected_components(pairs)
 
 
@@ -194,14 +194,7 @@ def dd_cluster_components_star(spark, sf_dir):
         ngram_jaccard_pairs,
     )
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    pairs = ngram_jaccard_pairs(docs.unionByName(near), threshold=0.5)
+    pairs = ngram_jaccard_pairs(_aug_corpus(spark, sf_dir), threshold=0.5)
     return connected_components_star(pairs)
 
 
@@ -216,14 +209,7 @@ def dd_minhash_lsh_pairs(spark, sf_dir):
     signature equi-join prunes candidates, exact Jaccard verifies."""
     from bdc_collection_builder_spark.extensions.dedup import minhash_lsh_pairs
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    return minhash_lsh_pairs(docs.unionByName(near), threshold=0.5)
+    return minhash_lsh_pairs(_aug_corpus(spark, sf_dir), threshold=0.5)
 
 
 # --- Engine-neutral (md5-60bit) variants of the hash-driven dedup ops.
@@ -312,14 +298,7 @@ def dd_minhash_lsh_md5(spark, sf_dir):
     exact-Jaccard verification) and hash-checked."""
     from bdc_collection_builder_spark.extensions.dedup import minhash_lsh_pairs
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    return minhash_lsh_pairs(docs.unionByName(near), threshold=0.5,
+    return minhash_lsh_pairs(_aug_corpus(spark, sf_dir), threshold=0.5,
                              engine_neutral=True)
 
 
@@ -377,14 +356,7 @@ def dd_simhash_md5(spark, sf_dir):
     bucketing, and Hamming filter all recomputed in DuckDB."""
     from bdc_collection_builder_spark.extensions.dedup import simhash_near_pairs
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    return simhash_near_pairs(docs.unionByName(near), radius=3,
+    return simhash_near_pairs(_aug_corpus(spark, sf_dir), radius=3,
                               engine_neutral=True)
 
 
@@ -397,14 +369,7 @@ def dd_simhash_pairs(spark, sf_dir):
     """SimHash near-dup pairs within Hamming radius 3, quarter-bucketed."""
     from bdc_collection_builder_spark.extensions.dedup import simhash_near_pairs
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    return simhash_near_pairs(docs.unionByName(near), radius=3)
+    return simhash_near_pairs(_aug_corpus(spark, sf_dir), radius=3)
 
 
 _DOT_SQL = (
@@ -2785,14 +2750,7 @@ def dd_survivorship(spark, sf_dir):
     )
     from bdc_collection_builder_spark.extensions.text import logreg_quality
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    corpus = docs.unionByName(near)
+    corpus = _aug_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, threshold=0.5)
     comps = connected_components_star(pairs)
     # Membership decides BEFORE the quality features evaluate: joining
@@ -3848,14 +3806,7 @@ def dd_planted_pair_eval(spark, sf_dir):
         minhash_lsh_pairs,
     )
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") % 5 == 0)
-    near = (
-        t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    pred = minhash_lsh_pairs(docs.unionByName(near), threshold=0.5,
+    pred = minhash_lsh_pairs(_aug_corpus(spark, sf_dir), threshold=0.5,
                              engine_neutral=True).select("doc_a", "doc_b")
     truth = (
         t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
@@ -5194,14 +5145,7 @@ def dd_minhash_estimate_error(spark, sf_dir):
         tracked_persist,
     )
 
-    base = t(spark, sf_dir, "documents")
-    docs = base.select("doc_id", "text").filter(F.col("doc_id") % 5 == 0)
-    near = (
-        base.filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    corpus = docs.unionByName(near)
+    corpus = _aug_corpus(spark, sf_dir)
     sh = tracked_persist(shingles(corpus, "text", "doc_id", 5))
     sig = tracked_persist(
         minhash_signatures_from_shingles(sh, 32, "md5"))
@@ -5803,14 +5747,7 @@ def cu_cluster_size_distribution(spark, sf_dir):
         ngram_jaccard_pairs,
     )
 
-    base = t(spark, sf_dir, "documents")
-    docs = base.select("doc_id", "text").filter(F.col("doc_id") % 5 == 0)
-    near = (
-        base.filter(F.col("doc_id") % 20 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" xy zz wq")).alias("text"))
-    )
-    corpus = docs.unionByName(near)
+    corpus = _aug_corpus(spark, sf_dir)
     pairs = ngram_jaccard_pairs(corpus, threshold=0.5)
     comp = connected_components(pairs)
     assigned = (

@@ -21,7 +21,7 @@ from bdc_collection_builder_spark.functions.pixel import (
     synthetic_pixels,
     synthetic_pixels_oracle,
 )
-from bdc_collection_builder_spark.plans._util import scratch_dir
+from bdc_collection_builder_spark.plans._util import _scene_files
 from bdc_collection_builder_spark.plans.registry import query
 
 _PIXELS = synthetic_pixels_oracle(n_scenes=4, height=16, width=16)
@@ -276,41 +276,18 @@ def px_sobel_edges(spark, sf_dir):
         .alias("grad_l1"))
 
 
-_PNG_DIRS: dict[str, str] = {}
-
-
 def _png_quicklook_dir(spark) -> str:
     """Write each scene's quicklook as a REAL grayscale PNG file, once
-    per process — executor-side inside applyInPandas, like the TIFF
-    sink (plans/sources._tiff_scene_dir)."""
-    if "dir" not in _PNG_DIRS:
-        import os
+    per process, through the one scene-file sink
+    (:func:`plans._util._scene_files`)."""
+    from bdc_collection_builder_spark.sources.png import write_png
 
-        import numpy as np
-        import pandas as pd
-
-        from bdc_collection_builder_spark.sources.png import write_png
-
-        out = scratch_dir("bdc_png_quicklooks_")
-        px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
-        red = px.select(
-            "scene_id", "y", "x",
-            quicklook_radiometry(F.col("B04")).alias("red"))
-
-        def write_group(key, pdf):
-            sid = int(key[0])
-            pdf = pdf.sort_values(["y", "x"])
-            arr = pdf["red"].to_numpy().reshape(16, 16).astype("uint8")
-            path = os.path.join(out, f"scene_{sid}.png")
-            with open(path, "wb") as fh:
-                fh.write(write_png(arr))
-            return pd.DataFrame({"scene_id": [sid], "path": [path]})
-
-        manifest = red.groupBy("scene_id").applyInPandas(
-            write_group, "scene_id long, path string")
-        assert manifest.count() == 4
-        _PNG_DIRS["dir"] = out
-    return _PNG_DIRS["dir"]
+    px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
+    red = px.select("scene_id", "y", "x",
+                    quicklook_radiometry(F.col("B04")).alias("red"))
+    return _scene_files(
+        spark, "png", "png",
+        lambda sid, grids: write_png(grids["red"].astype("uint8")), px=red)
 
 
 @query(

@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bdc_collection_builder_spark.functions.pixel import synthetic_pixels_oracle
-from bdc_collection_builder_spark.plans._util import duck_ts, scratch_dir, t
+from bdc_collection_builder_spark.plans._util import (
+    _scene_files,
+    duck_ts,
+    scratch_dir,
+    t,
+)
 from bdc_collection_builder_spark.plans.registry import query
 
 _TS = duck_ts()
@@ -234,44 +239,18 @@ def _hdf_scene_dir(spark) -> str:
     codec, sources/hdf4.py): per scene one container holding the
     sur_refl_b01/sur_refl_b02/QA subdatasets plus a metadata text blob
     carrying the cloud cover — the MOD09/MOD13-style layout hdf.py
-    iterates with GDAL. Same distributed applyInPandas sink shape as
-    :func:`_tiff_scene_dir`."""
-    if "hdf_dir" not in _TIFF_DIRS:
-        import os
+    iterates with GDAL. Written by the one scene-file sink,
+    :func:`plans._util._scene_files`."""
+    from bdc_collection_builder_spark.sources.hdf4 import write_hdf4
 
-        import pandas as pd
+    def encode(sid, grids):
+        cloud = (sid * 37 % 101) / 2.0
+        return write_hdf4({"sur_refl_b01": grids["B04"].astype("int16"),
+                           "sur_refl_b02": grids["B08"].astype("int16"),
+                           "QA": grids["SCL"].astype("uint16")},
+                          metadata=f"cloudcover={cloud}")
 
-        from bdc_collection_builder_spark.functions.pixel import (
-            synthetic_pixels,
-        )
-        from bdc_collection_builder_spark.sources.hdf4 import write_hdf4
-
-        out = scratch_dir("bdc_hdf_scenes_")
-        px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
-
-        def write_group(key, pdf):
-            sid = int(key[0])
-            pdf = pdf.sort_values(["y", "x"])
-            grids = {
-                "sur_refl_b01": pdf["B04"].to_numpy()
-                .reshape(16, 16).astype("int16"),
-                "sur_refl_b02": pdf["B08"].to_numpy()
-                .reshape(16, 16).astype("int16"),
-                "QA": pdf["SCL"].to_numpy().reshape(16, 16).astype("uint16"),
-            }
-            cloud = (sid * 37 % 101) / 2.0
-            data = write_hdf4(grids, metadata=f"cloudcover={cloud}")
-            path = os.path.join(out, f"scene_{sid}.hdf")
-            with open(path, "wb") as fh:
-                fh.write(data)
-            return pd.DataFrame(
-                {"scene_id": [sid], "path": [path], "bytes": [len(data)]})
-
-        manifest = px.groupBy("scene_id").applyInPandas(
-            write_group, "scene_id long, path string, bytes long")
-        assert manifest.count() == 4
-        _TIFF_DIRS["hdf_dir"] = out
-    return _TIFF_DIRS["hdf_dir"]
+    return _scene_files(spark, "hdf", "hdf", encode)
 
 
 @query(
@@ -1541,47 +1520,18 @@ def s28_orc_roundtrip(spark, sf_dir):
 
 # -- S20: real-TIFF raster scan (pure-Python codec, no GDAL) ------------
 
-_TIFF_DIRS: dict[str, str] = {}
-
-
 def _tiff_scene_dir(spark) -> str:
     """Write the synthetic 4-scene pixel grid as REAL single-band
-    int16 GeoTIFF files, once per process. The write happens
-    executor-side inside ``applyInPandas`` (each scene group encodes
-    and writes its own file — the distributed sink shape; the returned
-    manifest is 4 rows). On a cluster the open() targets shared
-    storage; locally it's a temp dir."""
-    if "dir" not in _TIFF_DIRS:
-        import os
+    int16 GeoTIFF files, once per process, through the one scene-file
+    sink (:func:`plans._util._scene_files`)."""
+    from bdc_collection_builder_spark.sources.tiff import write_tiff
 
-        import pandas as pd
+    def encode(sid, grids):
+        return write_tiff(grids["B04"].astype("int16"),
+                          pixel_scale=(10.0, 10.0, 0.0),
+                          tiepoint=(0.0, 0.0, 0.0, -46.0, -13.0, 0.0))
 
-        from bdc_collection_builder_spark.functions.pixel import (
-            synthetic_pixels,
-        )
-        from bdc_collection_builder_spark.sources.tiff import write_tiff
-
-        out = scratch_dir("bdc_tiff_scenes_")
-        px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
-
-        def write_group(key, pdf):
-            sid = int(key[0])
-            pdf = pdf.sort_values(["y", "x"])
-            arr = pdf["B04"].to_numpy().reshape(16, 16).astype("int16")
-            data = write_tiff(
-                arr, pixel_scale=(10.0, 10.0, 0.0),
-                tiepoint=(0.0, 0.0, 0.0, -46.0, -13.0, 0.0))
-            path = os.path.join(out, f"scene_{sid}.tif")
-            with open(path, "wb") as fh:
-                fh.write(data)
-            return pd.DataFrame(
-                {"scene_id": [sid], "path": [path], "bytes": [len(data)]})
-
-        manifest = px.groupBy("scene_id").applyInPandas(
-            write_group, "scene_id long, path string, bytes long")
-        assert manifest.count() == 4  # materializes the writes
-        _TIFF_DIRS["dir"] = out
-    return _TIFF_DIRS["dir"]
+    return _scene_files(spark, "tiff", "tif", encode)
 
 
 @query(
@@ -1668,41 +1618,18 @@ def _tiff_multiband_dir(spark) -> str:
     """Write the synthetic pixel grid as REAL 3-band (B04, B08, SCL)
     pixel-interleaved int16 GeoTIFFs — the band-stack shape the
     reference's SR outputs and RGB quicklooks use (publish.py:77-88).
-    Same distributed applyInPandas sink as :func:`_tiff_scene_dir`."""
-    if "mb_dir" not in _TIFF_DIRS:
-        import os
+    Written by the one scene-file sink, :func:`plans._util._scene_files`."""
+    import numpy as np
 
-        import numpy as np
-        import pandas as pd
+    from bdc_collection_builder_spark.sources.tiff import write_tiff
 
-        from bdc_collection_builder_spark.functions.pixel import (
-            synthetic_pixels,
-        )
-        from bdc_collection_builder_spark.sources.tiff import write_tiff
+    def encode(sid, grids):
+        stack = np.stack([grids[b].astype("int16")
+                          for b in ("B04", "B08", "SCL")], axis=-1)
+        return write_tiff(stack, pixel_scale=(10.0, 10.0, 0.0),
+                          tiepoint=(0.0, 0.0, 0.0, -46.0, -13.0, 0.0))
 
-        out = scratch_dir("bdc_tiff_mb_scenes_")
-        px = synthetic_pixels(spark, n_scenes=4, height=16, width=16)
-
-        def write_group(key, pdf):
-            sid = int(key[0])
-            pdf = pdf.sort_values(["y", "x"])
-            stack = np.stack(
-                [pdf[b].to_numpy().reshape(16, 16).astype("int16")
-                 for b in ("B04", "B08", "SCL")], axis=-1)
-            data = write_tiff(
-                stack, pixel_scale=(10.0, 10.0, 0.0),
-                tiepoint=(0.0, 0.0, 0.0, -46.0, -13.0, 0.0))
-            path = os.path.join(out, f"scene_{sid}.tif")
-            with open(path, "wb") as fh:
-                fh.write(data)
-            return pd.DataFrame(
-                {"scene_id": [sid], "path": [path], "bytes": [len(data)]})
-
-        manifest = px.groupBy("scene_id").applyInPandas(
-            write_group, "scene_id long, path string, bytes long")
-        assert manifest.count() == 4
-        _TIFF_DIRS["mb_dir"] = out
-    return _TIFF_DIRS["mb_dir"]
+    return _scene_files(spark, "tiff_mb", "tif", encode)
 
 
 @query(
@@ -1787,7 +1714,7 @@ def s23_tiff_multiband_scan(spark, sf_dir):
 
 
 # loopback HTTP fixture providers, started once per process (daemon
-# threads; live for the process like the _TIFF_DIRS caches)
+# threads; live for the process like the _scene_files dirs)
 _HTTP_SRV: dict[str, object] = {}
 
 
@@ -2144,6 +2071,32 @@ def s22_xml_mtd_parse(spark, sf_dir):
         "scene_key long, cloud_pct double, pos_list string, n_bands long")
 
 
+def _orders_as_items(df, cloud=None):
+    """``orders`` rows projected into the catalog ``items`` schema (all
+    17 columns): the order key is the item id and name, ``key % 7``
+    the collection, ``cloud`` (default ``o_totalprice``) the cloud
+    cover, every other column a typed NULL. The seed of the store
+    queries."""
+    return df.select(
+        F.col("o_orderkey").cast("long").alias("id"),
+        F.col("o_orderkey").cast("string").alias("name"),
+        (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
+        F.lit(None).cast("timestamp_ntz").alias("start_date"),
+        F.lit(None).cast("timestamp_ntz").alias("end_date"),
+        (F.col("o_totalprice") if cloud is None else cloud)
+        .alias("cloud_cover"),
+        *[F.lit(None).cast("double").alias(c) for c in
+          ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
+        F.lit(None).cast("string").alias("footprint_wkt"),
+        F.lit(None).cast("int").alias("srid"),
+        F.lit(None).cast("int").alias("tile_id"),
+        F.lit(None).cast("int").alias("provider_id"),
+        F.lit(None).cast("string").alias("assets"),
+        F.lit(True).alias("is_available"),
+        F.lit(None).cast("timestamp_ntz").alias("updated"),
+    )
+
+
 # scratch store for the CDF-maintenance query, one per (process, sf)
 _CDF_STORES: dict[str, tuple[str, str, str]] = {}
 
@@ -2160,32 +2113,13 @@ def _cdf_store(spark, sf_dir) -> tuple[str, str, str]:
         store = CatalogStore(spark, root)
         orders = t(spark, sf_dir, "orders")
 
-        def items_of(df, bump):
-            return df.select(
-                F.col("o_orderkey").cast("long").alias("id"),
-                F.col("o_orderkey").cast("string").alias("name"),
-                (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
-                F.lit(None).cast("timestamp_ntz").alias("start_date"),
-                F.lit(None).cast("timestamp_ntz").alias("end_date"),
-                (F.col("o_totalprice") + bump).alias("cloud_cover"),
-                *[F.lit(None).cast("double").alias(c) for c in
-                  ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
-                F.lit(None).cast("string").alias("footprint_wkt"),
-                F.lit(None).cast("int").alias("srid"),
-                F.lit(None).cast("int").alias("tile_id"),
-                F.lit(None).cast("int").alias("provider_id"),
-                F.lit(None).cast("string").alias("assets"),
-                F.lit(True).alias("is_available"),
-                F.lit(None).cast("timestamp_ntz").alias("updated"),
-            )
-
-        store.overwrite(
-            "items", items_of(orders.filter(F.col("o_orderkey") % 10 == 0),
-                              0.0))
+        store.overwrite("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 10 == 0),
+            F.col("o_totalprice") + 0.0))
         gen1 = store._current_gen("items")
-        store.merge_upsert(
-            "items", items_of(orders.filter(F.col("o_orderkey") % 20 == 0),
-                              1.0))
+        store.merge_upsert("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 20 == 0),
+            F.col("o_totalprice") + 1.0))
         gen2 = store._current_gen("items")
         _CDF_STORES[sf_dir] = (root, gen1, gen2)
     return _CDF_STORES[sf_dir]
@@ -2482,29 +2416,10 @@ def _schema_evo_store(spark, sf_dir) -> tuple[str, str, str]:
         store = CatalogStore(spark, root)
         orders = t(spark, sf_dir, "orders")
 
-        def items_of(df):
-            return df.select(
-                F.col("o_orderkey").cast("long").alias("id"),
-                F.col("o_orderkey").cast("string").alias("name"),
-                (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
-                F.lit(None).cast("timestamp_ntz").alias("start_date"),
-                F.lit(None).cast("timestamp_ntz").alias("end_date"),
-                F.col("o_totalprice").alias("cloud_cover"),
-                *[F.lit(None).cast("double").alias(c) for c in
-                  ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
-                F.lit(None).cast("string").alias("footprint_wkt"),
-                F.lit(None).cast("int").alias("srid"),
-                F.lit(None).cast("int").alias("tile_id"),
-                F.lit(None).cast("int").alias("provider_id"),
-                F.lit(None).cast("string").alias("assets"),
-                F.lit(True).alias("is_available"),
-                F.lit(None).cast("timestamp_ntz").alias("updated"),
-            )
-
-        store.overwrite(
-            "items", items_of(orders.filter(F.col("o_orderkey") % 10 == 0)))
+        store.overwrite("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 10 == 0)))
         gen1 = store._current_gen("items")
-        evolved = items_of(
+        evolved = _orders_as_items(
             orders.filter(F.col("o_orderkey") % 20 == 0)
         ).withColumn(
             "quality_score",
@@ -2931,32 +2846,13 @@ def _part_evo_outcomes(spark, sf_dir):
         store = PartitionedCatalogStore(spark, root)
         orders = t(spark, sf_dir, "orders")
 
-        def items_of(df):
-            return df.select(
-                F.col("o_orderkey").cast("long").alias("id"),
-                F.col("o_orderkey").cast("string").alias("name"),
-                (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
-                F.lit(None).cast("timestamp_ntz").alias("start_date"),
-                F.lit(None).cast("timestamp_ntz").alias("end_date"),
-                F.col("o_totalprice").alias("cloud_cover"),
-                *[F.lit(None).cast("double").alias(c) for c in
-                  ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
-                F.lit(None).cast("string").alias("footprint_wkt"),
-                F.lit(None).cast("int").alias("srid"),
-                F.lit(None).cast("int").alias("tile_id"),
-                F.lit(None).cast("int").alias("provider_id"),
-                F.lit(None).cast("string").alias("assets"),
-                F.lit(True).alias("is_available"),
-                F.lit(None).cast("timestamp_ntz").alias("updated"),
-            )
-
-        store.overwrite(
-            "items", items_of(orders.filter(F.col("o_orderkey") % 10 == 0)))
+        store.overwrite("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 10 == 0)))
         pre_gens = {
             v: store._sub("items", v)._current_gen("items")
             for v in store._partition_values("items")
         }
-        evolved = items_of(
+        evolved = _orders_as_items(
             orders.filter((F.col("o_orderkey") % 20 == 0)
                           & ((F.col("o_orderkey") % 7).isin(1, 2)))
         ).withColumn(
@@ -3048,24 +2944,8 @@ def _erasure_store_root(spark, sf_dir) -> str:
         root = scratch_dir("bdc_erasure_store_")
         store = CatalogStore(spark, root)
         orders = t(spark, sf_dir, "orders")
-        items = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-            F.col("o_orderkey").cast("long").alias("id"),
-            F.col("o_orderkey").cast("string").alias("name"),
-            (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
-            F.lit(None).cast("timestamp_ntz").alias("start_date"),
-            F.lit(None).cast("timestamp_ntz").alias("end_date"),
-            F.col("o_totalprice").alias("cloud_cover"),
-            *[F.lit(None).cast("double").alias(c) for c in
-              ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
-            F.lit(None).cast("string").alias("footprint_wkt"),
-            F.lit(None).cast("int").alias("srid"),
-            F.lit(None).cast("int").alias("tile_id"),
-            F.lit(None).cast("int").alias("provider_id"),
-            F.lit(None).cast("string").alias("assets"),
-            F.lit(True).alias("is_available"),
-            F.lit(None).cast("timestamp_ntz").alias("updated"),
-        )
-        store.overwrite("items", items)
+        store.overwrite("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 10 == 0)))
         keys = orders.filter(F.col("o_orderkey") % 30 == 0).select(
             F.col("o_orderkey").cast("string").alias("name"),
             (F.col("o_orderkey") % 7).cast("int").alias("collection_id"))
@@ -3134,24 +3014,8 @@ def _vacuum_horizon_store(spark, sf_dir) -> tuple[str, bool, bool]:
         root = scratch_dir("bdc_vacuum_horizon_")
         store = CatalogStore(spark, root)
         orders = t(spark, sf_dir, "orders")
-        items = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-            F.col("o_orderkey").cast("long").alias("id"),
-            F.col("o_orderkey").cast("string").alias("name"),
-            (F.col("o_orderkey") % 7).cast("int").alias("collection_id"),
-            F.lit(None).cast("timestamp_ntz").alias("start_date"),
-            F.lit(None).cast("timestamp_ntz").alias("end_date"),
-            F.col("o_totalprice").alias("cloud_cover"),
-            *[F.lit(None).cast("double").alias(c) for c in
-              ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")],
-            F.lit(None).cast("string").alias("footprint_wkt"),
-            F.lit(None).cast("int").alias("srid"),
-            F.lit(None).cast("int").alias("tile_id"),
-            F.lit(None).cast("int").alias("provider_id"),
-            F.lit(None).cast("string").alias("assets"),
-            F.lit(True).alias("is_available"),
-            F.lit(None).cast("timestamp_ntz").alias("updated"),
-        )
-        store.overwrite("items", items)
+        store.overwrite("items", _orders_as_items(
+            orders.filter(F.col("o_orderkey") % 10 == 0)))
         gen0 = store._current_gen("items")
         keys = orders.filter(F.col("o_orderkey") % 30 == 0).select(
             F.col("o_orderkey").cast("string").alias("name"),

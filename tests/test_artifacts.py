@@ -118,3 +118,31 @@ def test_no_unreferenced_package_helpers():
         and words[node.name] <= 1
     ]
     assert not dead, dead
+
+
+def test_no_spark_action_inside_package_assert():
+    """No package ``assert`` runs a Spark action. ``python -O`` strips
+    asserts, so an action that exists only inside one never runs: a
+    lazy sink materialized by ``assert df.count() == n`` writes
+    nothing, and whatever reads its output sees it empty."""
+    import ast
+
+    actions = {"count", "collect", "first", "take", "toPandas"}
+    package = os.path.join(ROOT, "bdc_collection_builder_spark")
+    found = []
+    for dirpath, dirs, files in os.walk(package):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            found += [
+                f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+                for node in ast.walk(tree) if isinstance(node, ast.Assert)
+                if any(isinstance(call, ast.Call)
+                       and isinstance(call.func, ast.Attribute)
+                       and call.func.attr in actions
+                       for call in ast.walk(node))
+            ]
+    assert not found, found

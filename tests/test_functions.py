@@ -56,15 +56,8 @@ def test_lsh_recall_vs_exact(spark, sf_dir):
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
     )
-    from bdc_collection_builder_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text") \
-        .filter(F.col("doc_id") % 5 == 0)
-    near = (load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 20 == 0)
-            .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                    F.concat("text", F.lit(" xy zz wq")).alias("text")))
-    corpus = docs.unionByName(near)
+    corpus, _ = _dedup_corpus(spark, sf_dir)
     exact = {(r.doc_a, r.doc_b) for r in
              ngram_jaccard_pairs(corpus, threshold=0.5).collect()}
     lsh = {(r.doc_a, r.doc_b) for r in
@@ -121,18 +114,14 @@ def test_polygon_intersects_exact_cases(spark):
 
 
 def _dedup_corpus(spark, sf_dir):
-    """The fixture the dd_* queries use: every-5th doc plus near-dup
-    copies of every-20th (suffix-perturbed, shifted ids)."""
-    from bdc_collection_builder_spark.sources.tables import load_table
+    """The fixture the dd_* queries use (every-5th doc plus near-dup
+    copies of every-20th, suffix-perturbed, shifted ids) and the ids
+    of the planted copies' seed documents."""
+    from bdc_collection_builder_spark.plans.extensions import _aug_corpus
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text") \
-        .filter(F.col("doc_id") % 5 == 0)
-    near = (load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 20 == 0)
-            .select((F.col("doc_id") + 1000000).alias("doc_id"),
-                    F.concat("text", F.lit(" xy zz wq")).alias("text")))
-    return docs.unionByName(near), \
-        {r.doc_id for r in docs.filter(F.col("doc_id") % 20 == 0).collect()}
+    corpus = _aug_corpus(spark, sf_dir)
+    return corpus, {r.doc_id - 1000000 for r in
+                    corpus.filter(F.col("doc_id") >= 1000000).collect()}
 
 
 def test_minhash_production_path_pinned_to_md5_twin(spark, sf_dir):

@@ -867,6 +867,48 @@ def test_overwrite_staged_gen_survives_retention_horizon(spark, tmp_path,
     assert a.read("items").count() == 7
 
 
+def test_partitioned_merge_gen_survives_racing_vacuum(spark, tmp_path,
+                                                      fixtures):
+    """A partitioned merge moves each staged partition in as a new
+    generation and then CAS-flips it. The moved dir keeps its staging
+    mtime, so an explicit ``vacuum(keep_last=1)`` that runs before the
+    flip, while another writer has a newer generation staged in that
+    partition, must not collect it: the flip would still succeed and
+    ``_CURRENT`` would name a missing directory."""
+    from bdc_collection_builder_spark.catalog import store as store_mod
+    from bdc_collection_builder_spark.catalog.store import (
+        PartitionedCatalogStore,
+    )
+
+    s = PartitionedCatalogStore(spark, str(tmp_path / "pmerge_vacuum"))
+    s.overwrite("items", fixtures["items"])
+    total = s.read("items").count()
+    value = s._partition_values("items")[0]
+    incoming = (s.read("items")
+                .filter(F.col("collection_id").cast("string") == value)
+                .limit(3).withColumn("cloud_cover", F.lit(-5.0)))
+    orig_flip = store_mod.CatalogStore._flip
+    raced = {}
+
+    def racing_flip(self, table, gen, expected=store_mod._UNCONDITIONAL):
+        if not raced:
+            raced["gen"] = gen
+            other = s._sub("items", value)
+            other._stage_pinned("items", other.read("items").limit(1))
+            s.vacuum("items", keep_last=1)
+        return orig_flip(self, table, gen, expected=expected)
+
+    store_mod.CatalogStore._flip = racing_flip
+    try:
+        s.merge_upsert("items", incoming)
+    finally:
+        store_mod.CatalogStore._flip = orig_flip
+    assert raced, "race window was not exercised"
+    assert s._sub("items", value)._current_gen("items") == raced["gen"]
+    assert s.read("items").count() == total
+    assert s.read("items").filter(F.col("cloud_cover") == -5.0).count() == 3
+
+
 def test_vacuum_skips_temporary_even_unpinned(spark, tmp_path, fixtures):
     """Belt-and-braces: even with NO pin (e.g. a writer in another
     process whose pin file was lost), _vacuum never collects a gen-*
