@@ -1111,8 +1111,6 @@ def st_stateful_sessionize(spark, sf_dir):
     sessionization minus each user's last session) is a FULL value
     check; only the always-on multi-restart schedule is engine-order
     dependent (covered by the streaming tests instead)."""
-    import uuid
-
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.stateful import (
         streaming_sessionize,
@@ -1122,18 +1120,13 @@ def st_stateful_sessionize(spark, sf_dir):
     events_dir = f"{scratch}/events"
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(
         events_dir)
-    qname = f"sessions_{uuid.uuid4().hex[:8]}"
-    # NOT given the 8-partition state sizing of the stream-join
-    # queries: measured in round 10 (same-session A/B at sf0.1), 8
-    # partitions cost ~15% here — the drain's wall is the
-    # applyInPandasWithState pandas compute over the event volume,
-    # which WANTS the parallelism, not the per-partition state-commit
-    # overhead that dominates the tiny-state stream-stream joins.
-    q = streaming_sessionize(spark, events_dir, f"{scratch}/ckpt",
-                             queryName=qname)
-    q.awaitTermination(300)
-    return spark.sql(
-        f"SELECT user_id, session_start, session_end, n_events FROM {qname}"
+    # Uncapped state partitions, unlike the stream-join drains: this
+    # drain's wall is the applyInPandasWithState pandas compute over the
+    # event volume, which wants the parallelism (8 partitions cost ~15%
+    # in a same-session A/B at sf0.1), not the per-partition
+    # state-commit overhead that dominates the tiny-state joins.
+    return streaming_sessionize(
+        spark, events_dir, f"{scratch}/ckpt"
     ).orderBy("user_id", "session_start")
 
 
@@ -1169,9 +1162,8 @@ def st_incremental_dedup(spark, sf_dir):
     (docs.filter(F.col("doc_id") % 10 == 0)
      .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
      .write.mode("append").parquet(f"{scratch}/in"))
-    q = incremental_dedup(spark, f"{scratch}/in", f"{scratch}/seen",
-                          f"{scratch}/out", f"{scratch}/ckpt")
-    q.awaitTermination(300)
+    incremental_dedup(spark, f"{scratch}/in", f"{scratch}/seen",
+                      f"{scratch}/out", f"{scratch}/ckpt")
     return (
         spark.read.parquet(f"{scratch}/out")
         .select("content_hash").orderBy("content_hash")
@@ -1201,8 +1193,7 @@ def st_incremental_near_dedup(spark, sf_dir):
     — so the emitted ``doc_id % 1000000`` (the planted copies' offset
     folds each copy onto its original) is an order-independent cluster
     representative, making the query fully value-checkable: the oracle
-    is simply every original id (VERDICT-r3 task 8; this was the last
-    rows-only streaming entry).
+    is simply every original id.
 
     That invariant requires the near-dup graph to be EXACTLY the
     planted matching — the raw documents text has organic near-dup
@@ -1214,7 +1205,6 @@ def st_incremental_near_dedup(spark, sf_dir):
 
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
-        drain_partitions,
         incremental_near_dedup,
     )
 
@@ -1238,11 +1228,8 @@ def st_incremental_near_dedup(spark, sf_dir):
      .select((F.col("doc_id") + 1000000).alias("doc_id"),
              F.concat("text", F.lit(" xy zz wq")).alias("text"))
      .coalesce(1).write.mode("append").parquet(f"{scratch}/in"))
-    with drain_partitions(spark):
-        q = incremental_near_dedup(spark, f"{scratch}/in",
-                                   f"{scratch}/state",
-                                   f"{scratch}/out", f"{scratch}/ckpt")
-        q.awaitTermination(300)
+    incremental_near_dedup(spark, f"{scratch}/in", f"{scratch}/state",
+                           f"{scratch}/out", f"{scratch}/ckpt")
     return (
         spark.read.parquet(f"{scratch}/out")
         .select((F.col("doc_id") % 1000000).alias("cluster_rep"))
@@ -1277,11 +1264,8 @@ def st_stream_stream_join(spark, sf_dir):
     not O(history). The inner join's emitted pairs equal the batch
     interval join exactly, which the DuckDB oracle replays — a FULL
     value check, not rows-only, unlike the stateful st_* queries."""
-    import uuid
-
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
-        drain_partitions,
         streaming_interval_join,
     )
 
@@ -1289,12 +1273,8 @@ def st_stream_stream_join(spark, sf_dir):
     events_dir = f"{scratch}/events"
     load_table(spark, sf_dir, "events").coalesce(8).write.mode(
         "overwrite").parquet(events_dir)
-    qname = f"ssj_{uuid.uuid4().hex[:8]}"
-    with drain_partitions(spark):
-        q = streaming_interval_join(spark, events_dir, events_dir,
-                                    f"{scratch}/ckpt", qname)
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT error_id, followup_id FROM {qname}")
+    return streaming_interval_join(spark, events_dir, events_dir,
+                                   f"{scratch}/ckpt")
 
 
 _WM_BATCH = 25      # arrival-order micro-batch size
@@ -2614,24 +2594,17 @@ def st_stream_outer_join(spark, sf_dir):
     100 TB: state is O(watermark window x arrival rate) per side,
     never O(history); the memory sink here is test plumbing — a real
     deployment writes the same append stream to parquet/Delta."""
-    import uuid
-
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
-        drain_partitions,
-        streaming_interval_join_left,
+        streaming_interval_join,
     )
 
     scratch = scratch_dir("bdc_ssjl_")
     events_dir = f"{scratch}/events"
     load_table(spark, sf_dir, "events").coalesce(8).write.mode(
         "overwrite").parquet(events_dir)
-    qname = f"ssjl_{uuid.uuid4().hex[:8]}"
-    with drain_partitions(spark):
-        q = streaming_interval_join_left(spark, events_dir, events_dir,
-                                         f"{scratch}/ckpt", qname)
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT error_id, followup_id FROM {qname}")
+    return streaming_interval_join(spark, events_dir, events_dir,
+                                   f"{scratch}/ckpt", outer=True)
 
 
 @query(
@@ -3122,16 +3095,13 @@ def st_stream_static_enrich(spark, sf_dir):
     100 TB: the dim broadcasts once per batch (dimension-sized); the
     stream side never shuffles for the join; the post-drain rollup
     is one map-side-combined groupBy with |nations| groups."""
-    import uuid
-
     from bdc_collection_builder_spark.sources.tables import load_table
     from bdc_collection_builder_spark.streaming.incremental import (
-        drain_partitions,
         streaming_static_enrich,
     )
 
     # scratch_dir reclaims the events copy + checkpoint on
-    # interpreter exit (ADVICE-r8)
+    # interpreter exit
     scratch = scratch_dir("bdc_sse_")
     events_dir = f"{scratch}/events"
     load_table(spark, sf_dir, "events").coalesce(8).write.mode(
@@ -3139,13 +3109,8 @@ def st_stream_static_enrich(spark, sf_dir):
     dim = (load_table(spark, sf_dir, "nation")
            .select(F.col("n_nationkey").cast("int").alias("nkey"),
                    F.col("n_name").alias("region_name")))
-    qname = f"sse_{uuid.uuid4().hex[:8]}"
-    with drain_partitions(spark):
-        q = streaming_static_enrich(spark, events_dir, dim,
-                                    f"{scratch}/ckpt", qname)
-        q.awaitTermination(300)
     return (
-        spark.sql(f"SELECT region_name, cents FROM {qname}")
+        streaming_static_enrich(spark, events_dir, dim, f"{scratch}/ckpt")
         .groupBy("region_name")
         .agg(F.count("*").cast("bigint").alias("n_purchases"),
              F.sum("cents").cast("bigint").alias("cents"))

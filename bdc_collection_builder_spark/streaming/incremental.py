@@ -13,6 +13,10 @@ Spark mapping:
   backlog then stops — the batch-mode analog of the always-on workers
 - windowed monitoring: watermarked event-time aggregation (Y6)
 
+Every stream function here is a blocking drain through :func:`drain`
+(or :func:`drain_to_memory`, whose functions return the drained rows);
+no other code starts or awaits a stream.
+
 Late-data retry state (Y2) deliberately does NOT live in streaming
 state: it's the persisted ledger (pipeline/ledger.due_retries), so a
 restart loses nothing.
@@ -20,20 +24,67 @@ restart loses nothing.
 
 from __future__ import annotations
 
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from bdc_collection_builder_spark.catalog.schemas import SCHEMAS
 from bdc_collection_builder_spark.catalog.store import CatalogStore
 
 
-# One schema literal for every events stream reader in this module
+# One schema literal for every events stream reader in the package
 # (batch readers go through sources.tables.load_table, which also
 # normalizes bigint/timestamp_ntz ts variants).
 EVENTS_STREAM_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                         "event_type string, value double, props string")
+DOCS_STREAM_SCHEMA = "doc_id long, text string"
+
+WINDOW = "10 minutes"            # tumbling window of the monitoring counts
+WATERMARK = "30 minutes"         # lateness bound of every watermarked stream
+FOLLOWUP_WINDOW = "10 minutes"   # how long after an error a follow-up counts
+NEAR_DUP_THRESHOLD = 0.5         # exact Jaccard at/above which a doc is a dup
+
+# Longest a drain may run before it is stopped and fails.
+DRAIN_TIMEOUT_S = 300
+
+
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Run ``writer``'s stream over its backlog and return when done.
+
+    The one place a stream starts: it checkpoints to
+    ``checkpoint_dir``, runs with ``Trigger.AvailableNow`` (process
+    what has arrived, then stop) and waits at most
+    ``DRAIN_TIMEOUT_S``. A drain still running then is stopped and
+    raises ``TimeoutError``, so no caller reads a half-drained sink
+    while the query keeps writing it; a failed micro-batch raises the
+    query's exception. Per-trigger records belong here too."""
+    query = (writer.option("checkpointLocation", checkpoint_dir)
+             .trigger(availableNow=True).start())
+    if not query.awaitTermination(DRAIN_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"stream drain still running after {DRAIN_TIMEOUT_S} s")
+
+
+def drain_to_memory(spark: SparkSession, writer: DataStreamWriter,
+                    checkpoint_dir: str) -> DataFrame:
+    """Drain ``writer`` into a memory sink and return its rows.
+
+    The sink gets a unique name, and its temp view is dropped once the
+    returned DataFrame holds the sink, so the rows live as long as that
+    DataFrame and no view outlives it in the session. Spark's memory
+    sink cannot recover from a checkpoint: give each drain a fresh
+    ``checkpoint_dir``. ``spark`` must be the session of the
+    writer's DataFrame: the sink's view lives in that session."""
+    name = f"drain_{uuid.uuid4().hex}"
+    try:
+        drain(writer.format("memory").queryName(name), checkpoint_dir)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @contextmanager
@@ -49,8 +100,8 @@ def drain_partitions(spark: SparkSession):
     partition too. At the registry's batch keyspaces 8 partitions
     suffice; capping them at the cores keeps each batch's commits in
     one wave of tasks. Production sizes this to key cardinality and
-    batch volume, not the relational shuffle default. Start and await
-    the drain inside the block: stateful operators fix their partition
+    batch volume, not the relational shuffle default. Run the whole
+    drain inside the block: stateful operators fix their partition
     count into the checkpoint at the first batch, and ``foreachBatch``
     bodies read the setting as each batch runs.
     """
@@ -64,12 +115,11 @@ def drain_partitions(spark: SparkSession):
 
 
 def incremental_publish(spark: SparkSession, incoming_dir: str,
-                        store: CatalogStore, checkpoint_dir: str):
-    """Continuously MERGE arriving item rows (parquet files dropped into
-    ``incoming_dir``) into the catalog. Returns the started query;
-    callers use ``awaitTermination`` (AvailableNow stops at backlog
-    end). Safe under re-delivery: the MERGE key makes re-processing a
-    no-op row replacement."""
+                        store: CatalogStore, checkpoint_dir: str) -> None:
+    """Drain arriving item rows (parquet files dropped into
+    ``incoming_dir``) into the catalog with a keyed MERGE. Safe under
+    re-delivery: the MERGE key makes re-processing a no-op row
+    replacement."""
     stream = (
         spark.readStream.schema(SCHEMAS["items"]).parquet(incoming_dir)
     )
@@ -78,18 +128,12 @@ def incremental_publish(spark: SparkSession, incoming_dir: str,
         store.merge_upsert(
             "items", batch.dropDuplicates(["name", "collection_id"]))
 
-    return (
-        stream.writeStream
-        .foreachBatch(publish_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream.writeStream.foreachBatch(publish_batch), checkpoint_dir)
 
 
 def incremental_publish_transactional(spark: SparkSession, incoming_dir: str,
                                       store: CatalogStore,
-                                      checkpoint_dir: str):
+                                      checkpoint_dir: str) -> None:
     """Y3/Y4 with the reference's FULL commit scope: publish.py's task
     commits the STAC item AND its task status inside one SQLAlchemy
     session (publish.py:575-605) — either both land or neither. Here
@@ -122,52 +166,40 @@ def incremental_publish_transactional(spark: SparkSession, incoming_dir: str,
             txn.merge_upsert("items", items)
             txn.merge_upsert("tasks", tasks, keys=["id"])
 
-    return (
-        stream.writeStream
-        .foreachBatch(publish_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream.writeStream.foreachBatch(publish_batch), checkpoint_dir)
 
 
 def streaming_status_counts(spark: SparkSession, events_dir: str,
-                            checkpoint_dir: str, gap: str = "10 minutes"):
-    """Y6 — live per-window per-type counts: the streaming form of the
-    monitoring plane's A2 histogram.
+                            checkpoint_dir: str) -> DataFrame:
+    """Y6 — per-window per-type counts: the streaming form of the
+    monitoring plane's A2 histogram, drained and returned.
 
     Complete output mode so every window (including those newer than
     any watermark at end-of-input) is visible to the dashboard — the
     state here is one row per (10-min window, event_type), tiny even at
     100 TB of events. For an append-mode sink (e.g. files), add
-    ``withWatermark("ts", "30 minutes")`` to bound state and accept
-    that the trailing windows emit only on the next trigger — the
+    ``withWatermark("ts", WATERMARK)`` to bound state and accept that
+    the trailing windows emit only on the next trigger — the
     bounded-state analog of the reference's 72x900s retry horizon."""
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
     agg = (
         stream
-        .groupBy(F.window("ts", gap), "event_type")
+        .groupBy(F.window("ts", WINDOW), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("status_counts")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_memory(spark, agg.writeStream.outputMode("complete"),
+                           checkpoint_dir)
 
 
 def streaming_windowed_counts_append(spark: SparkSession, events_dir: str,
-                                     checkpoint_dir: str, out_dir: str,
-                                     window: str = "10 minutes",
-                                     watermark: str = "30 minutes"):
+                                     checkpoint_dir: str,
+                                     out_dir: str) -> None:
     """Y2/Y6 — the bounded-state form of :func:`streaming_status_counts`:
     event-time windows under a watermark, append output.
 
     A window emits exactly once, when the watermark (max event time −
-    ``watermark``) passes its end; events arriving later than the
+    ``WATERMARK``) passes its end; events arriving later than the
     watermark are DROPPED, so state is O(open windows), never O(history)
     — the streaming analog of the reference's finite 72×900 s late-data
     horizon (tasks.py:129-134): lateness beyond the horizon stops being
@@ -177,23 +209,18 @@ def streaming_windowed_counts_append(spark: SparkSession, events_dir: str,
     state and emits only newly-closed windows."""
     stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet").option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(agg.writeStream.outputMode("append")
+          .format("parquet").option("path", out_dir), checkpoint_dir)
 
 
 def incremental_dedup(spark: SparkSession, incoming_dir: str,
-                      seen_dir: str, out_dir: str, checkpoint_dir: str,
-                      id_col: str = "doc_id", text_col: str = "text"):
+                      seen_dir: str, out_dir: str,
+                      checkpoint_dir: str) -> None:
     """Streaming exact dedup with a persistent seen-set — the streaming
     face of dd_exact_duplicates for continuously-arriving corpora.
 
@@ -205,21 +232,16 @@ def incremental_dedup(spark: SparkSession, incoming_dir: str,
     ``seen_dir`` from a mid-batch crash are harmless — the anti-join
     semantics don't change). At 100 TB the seen-set is the same parquet
     layout bucketed by hash so the anti-join co-locates; no driver
-    state, no streaming state store — a restart loses nothing.
-    Returns the started AvailableNow query."""
+    state, no streaming state store — a restart loses nothing."""
     from pyspark.sql.utils import AnalysisException
     from pyspark.sql.window import Window
 
-    stream = (
-        spark.readStream
-        .schema(f"{id_col} long, {text_col} string")
-        .parquet(incoming_dir)
-    )
+    stream = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(incoming_dir)
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
         hashed = batch.select(
-            id_col, text_col, F.md5(text_col).alias("content_hash"))
-        w = Window.partitionBy("content_hash").orderBy(id_col)
+            "doc_id", "text", F.md5("text").alias("content_hash"))
+        w = Window.partitionBy("content_hash").orderBy("doc_id")
         first = (
             hashed.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn")
@@ -233,17 +255,11 @@ def incremental_dedup(spark: SparkSession, incoming_dir: str,
         fresh.write.mode("append").parquet(out_dir)
         fresh.select("content_hash").write.mode("append").parquet(seen_dir)
 
-    return (
-        stream.writeStream
-        .foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream.writeStream.foreachBatch(dedup_batch), checkpoint_dir)
 
 
 def streaming_hll_sketches(spark: SparkSession, events_dir: str,
-                           checkpoint_dir: str, out_dir: str):
+                           checkpoint_dir: str, out_dir: str) -> None:
     """The streaming twin of a18_hll_rollup: every trigger builds
     per-(day, event_type) HLL sketches over JUST the newly arrived
     files and APPENDS them to a sketch table. Because register-max
@@ -262,13 +278,7 @@ def streaming_hll_sketches(spark: SparkSession, events_dir: str,
          .agg(F.hll_sketch_agg("user_id", 12).alias("sk"))
          .write.mode("append").parquet(out_dir))
 
-    return (
-        stream.writeStream
-        .foreachBatch(sketch_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(stream.writeStream.foreachBatch(sketch_batch), checkpoint_dir)
 
 
 def hll_rollup_estimate(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -284,8 +294,7 @@ def hll_rollup_estimate(spark: SparkSession, sketch_dir: str) -> DataFrame:
 
 def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
                            state_dir: str, out_dir: str,
-                           checkpoint_dir: str, threshold: float = 0.5,
-                           id_col: str = "doc_id", text_col: str = "text"):
+                           checkpoint_dir: str) -> None:
     """Streaming NEAR-duplicate dedup — the incremental face of
     dd_minhash_lsh_pairs for continuously-arriving corpora.
 
@@ -307,7 +316,7 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
        (band, band_key) — cost ∝ colliding candidates, never
        batch × corpus — and candidates verify with exact Jaccard
        against the persisted shingle table; docs at/above
-       ``threshold`` are dropped as dups,
+       ``NEAR_DUP_THRESHOLD`` are dropped as dups,
     4. accepted docs append to ``out_dir`` and both state tables,
        each append anti-joined against what that sink ALREADY holds.
 
@@ -319,7 +328,8 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
     even a torn double-append cannot skew a Jaccard verdict. At
     100 TB the state tables are hash-bucketed on band_key / shingle so
     the probe joins co-locate; no streaming state store — restart
-    replays only uncommitted files."""
+    replays only uncommitted files. The drain runs under
+    :func:`drain_partitions`."""
     from pyspark.sql.utils import AnalysisException
 
     from bdc_collection_builder_spark.extensions.dedup import (
@@ -330,11 +340,7 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
     bands_dir = f"{state_dir}/bands"
     shingles_dir = f"{state_dir}/shingles"
 
-    stream = (
-        spark.readStream
-        .schema(f"{id_col} long, {text_col} string")
-        .parquet(incoming_dir)
-    )
+    stream = spark.readStream.schema(DOCS_STREAM_SCHEMA).parquet(incoming_dir)
 
     def read_or_none(ss, path):
         try:
@@ -358,19 +364,18 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
         # round like the batch operator (minhash_lsh_pairs) so the
         # streaming verdicts match it doc-for-doc at the boundary
         return (common.join(n_a, "doc_id").join(n_b, "old_id")
-                .filter(F.round(jac, 4) >= threshold))
+                .filter(F.round(jac, 4) >= NEAR_DUP_THRESHOLD))
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
         ss = batch.sparkSession
-        batch = batch.dropDuplicates([id_col])
+        batch = batch.dropDuplicates(["doc_id"])
         # 1. ONE shingle pass; whole-text fallback for sub-k-token docs
-        sh = shingles(batch, text_col, id_col, hashed=True)
+        sh = shingles(batch, hashed=True)
         fallback = (
-            batch.join(sh.select(id_col).distinct(), id_col, "left_anti")
-            .select(id_col, F.xxhash64(text_col).alias("shingle"))
+            batch.join(sh.select("doc_id").distinct(), "doc_id", "left_anti")
+            .select("doc_id", F.xxhash64("text").alias("shingle"))
         )
-        sh_all, banded_all = banded_signatures(
-            sh=sh.unionByName(fallback), id_col=id_col)
+        sh_all, banded_all = banded_signatures(sh=sh.unionByName(fallback))
         sh_all = sh_all.persist()
         banded_all = banded_all.persist()
         # 2. within-batch near-dups: lower id wins
@@ -379,17 +384,17 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
         cand_in = (
             a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"b.{id_col}").alias("doc_id"),
-                    F.col(f"a.{id_col}").alias("old_id")).distinct()
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("b.doc_id").alias("doc_id"),
+                    F.col("a.doc_id").alias("old_id")).distinct()
         )
         sh_as_old = sh_all.withColumnRenamed("doc_id", "old_id")
         losers = (verified_pairs(cand_in, sh_all, sh_as_old)
-                  .select(F.col("doc_id").alias(id_col)).distinct())
-        survivors = batch.join(losers, id_col, "left_anti")
-        surv_ids = survivors.select(id_col)
-        sh_surv = sh_all.join(surv_ids, id_col)
-        banded_surv = banded_all.join(surv_ids, id_col)
+                  .select("doc_id").distinct())
+        survivors = batch.join(losers, "doc_id", "left_anti")
+        surv_ids = survivors.select("doc_id")
+        sh_surv = sh_all.join(surv_ids, "doc_id")
+        banded_surv = banded_all.join(surv_ids, "doc_id")
         # 3. probe the persisted state (deduped at read: a torn
         # double-append from a crashed epoch must not skew Jaccard)
         state_bands = read_or_none(ss, bands_dir)
@@ -410,8 +415,8 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
                 .filter(F.col("doc_id") != F.col("old_id"))
             )
             dup_ids = (verified_pairs(cand, sh_surv, state_sh)
-                       .select(id_col).distinct())
-            accepted = survivors.join(dup_ids, id_col, "left_anti")
+                       .select("doc_id").distinct())
+            accepted = survivors.join(dup_ids, "doc_id", "left_anti")
         else:
             accepted = survivors
         # 4. idempotent appends: each sink only receives ids it does
@@ -419,38 +424,33 @@ def incremental_near_dedup(spark: SparkSession, incoming_dir: str,
         # failure converges instead of duplicating
         already_out = read_or_none(ss, out_dir)
         to_out = (accepted if already_out is None
-                  else accepted.join(already_out.select(id_col),
-                                     id_col, "left_anti"))
+                  else accepted.join(already_out.select("doc_id"),
+                                     "doc_id", "left_anti"))
         to_out.write.mode("append").parquet(out_dir)
         in_state = (None if state_bands is None
-                    else state_bands.select(id_col).distinct())
-        acc_ids = accepted.select(id_col)
+                    else state_bands.select("doc_id").distinct())
+        acc_ids = accepted.select("doc_id")
         new_state_ids = (acc_ids if in_state is None
-                         else acc_ids.join(in_state, id_col, "left_anti"))
-        banded_surv.join(new_state_ids, id_col).write.mode("append") \
+                         else acc_ids.join(in_state, "doc_id", "left_anti"))
+        banded_surv.join(new_state_ids, "doc_id").write.mode("append") \
             .parquet(bands_dir)
-        sh_surv.join(new_state_ids, id_col).write.mode("append") \
+        sh_surv.join(new_state_ids, "doc_id").write.mode("append") \
             .parquet(shingles_dir)
         sh_all.unpersist()
         banded_all.unpersist()
 
-    return (
-        stream.writeStream
-        .foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with drain_partitions(spark):
+        drain(stream.writeStream.foreachBatch(dedup_batch), checkpoint_dir)
 
 
 def streaming_interval_join(spark: SparkSession, errors_dir: str,
                             events_dir: str, checkpoint_dir: str,
-                            query_name: str,
-                            watermark: str = "30 minutes",
-                            window_minutes: int = 10):
+                            outer: bool = False) -> DataFrame:
     """Y-series stream-stream INTERVAL join: a live stream of error
     events joined against the live event firehose, matching same-user
-    follow-ups inside ``[error.ts, error.ts + window]``.
+    follow-ups inside ``[error.ts, error.ts + FOLLOWUP_WINDOW]``;
+    drained under :func:`drain_partitions` and returned as
+    (error_id, followup_id) rows.
 
     This is the join family batch tj_range_error_followups expresses
     offline, kept runnable continuously: both sides carry watermarks
@@ -459,60 +459,19 @@ def streaming_interval_join(spark: SparkSession, errors_dir: str,
     EVICT state past that horizon — state is O(watermark window of both
     streams), never O(history). Inner join + availableNow drain emits
     exactly the batch join's pairs, which is what the oracle replays.
-    """
-    err = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(errors_dir)
-        .filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user"),
-                F.col("event_id").alias("error_id"),
-                F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", watermark)
-    )
-    fol = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
-        .select(F.col("user_id").alias("f_user"),
-                F.col("event_id").alias("followup_id"),
-                F.col("ts").alias("f_ts"))
-        .withWatermark("f_ts", watermark)
-    )
-    pairs = (
-        err.join(
-            fol,
-            (F.col("e_user") == F.col("f_user"))
-            & (F.col("f_ts") >= F.col("e_ts"))
-            & (F.col("f_ts")
-               <= F.col("e_ts") + F.expr(f"INTERVAL {window_minutes} MINUTES")),
-            "inner")
-        .select("error_id", "followup_id")
-    )
-    return (
-        pairs.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
-
-def streaming_interval_join_left(spark: SparkSession, errors_dir: str,
-                                 events_dir: str, checkpoint_dir: str,
-                                 query_name: str,
-                                 watermark: str = "30 minutes",
-                                 window_minutes: int = 10):
-    """Left-OUTER stream-stream interval join: every error event,
-    paired with the same-user non-error follow-ups inside
-    ``[error.ts, error.ts + window]`` — or emitted once with a NULL
-    follow-up if none arrives before the join state is evicted.
-
-    The outer semantics are the watermark-coupled part Spark's inner
-    join (streaming_interval_join) does not exercise: matched pairs
-    emit immediately (inner path), but an unmatched error can only be
+    ``outer=True`` makes it a left-OUTER join over non-error
+    follow-ups: every error, paired with its follow-ups or emitted
+    once with a NULL follow-up if none arrives before the join state
+    is evicted. (The follow-up side drops errors because an error
+    would otherwise match itself and never be null-padded.) Matched
+    pairs emit immediately, but an unmatched error can only be
     declared unmatched once the follow-up watermark has passed
-    ``error.ts + window`` — i.e. when no qualifying row can still
-    arrive. Errors whose eligibility horizon lies beyond the FINAL
-    watermark of the drained stream stay pending and are never
+    ``error.ts + FOLLOWUP_WINDOW`` — i.e. when no qualifying row can
+    still arrive. Errors whose eligibility horizon lies beyond the
+    FINAL watermark of the drained stream stay pending and are never
     emitted; the batch oracle must (and does) replay exactly that
-    horizon rule, which makes this query a value-exact check of
+    horizon rule, which makes the outer join a value-exact check of
     Spark's outer-join state-eviction contract rather than rows-only.
     """
     err = (
@@ -521,15 +480,16 @@ def streaming_interval_join_left(spark: SparkSession, errors_dir: str,
         .select(F.col("user_id").alias("e_user"),
                 F.col("event_id").alias("error_id"),
                 F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", watermark)
+        .withWatermark("e_ts", WATERMARK)
     )
+    fol = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
+    if outer:
+        fol = fol.filter(F.col("event_type") != "error")
     fol = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
-        .filter(F.col("event_type") != "error")
-        .select(F.col("user_id").alias("f_user"),
-                F.col("event_id").alias("followup_id"),
-                F.col("ts").alias("f_ts"))
-        .withWatermark("f_ts", watermark)
+        fol.select(F.col("user_id").alias("f_user"),
+                   F.col("event_id").alias("followup_id"),
+                   F.col("ts").alias("f_ts"))
+        .withWatermark("f_ts", WATERMARK)
     )
     pairs = (
         err.join(
@@ -537,34 +497,27 @@ def streaming_interval_join_left(spark: SparkSession, errors_dir: str,
             (F.col("e_user") == F.col("f_user"))
             & (F.col("f_ts") >= F.col("e_ts"))
             & (F.col("f_ts")
-               <= F.col("e_ts") + F.expr(f"INTERVAL {window_minutes} MINUTES")),
-            "leftOuter")
+               <= F.col("e_ts") + F.expr(f"INTERVAL {FOLLOWUP_WINDOW}")),
+            "leftOuter" if outer else "inner")
         .select("error_id", "followup_id")
     )
-    return (
-        pairs.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with drain_partitions(spark):
+        return drain_to_memory(spark,
+                               pairs.writeStream.outputMode("append"),
+                               checkpoint_dir)
 
 
 def incremental_erasure(spark: SparkSession, requests_dir: str,
                         store: CatalogStore, checkpoint_dir: str,
-                        table: str = "items",
-                        key_cols: tuple[str, str] = ("name",
-                                                     "collection_id"),
                         max_inlist_keys: int = 256,
-                        retain_generations: int | None = None):
-    """Continuously apply DELETE requests (erasure/compliance feed) to
-    a catalog table: each micro-batch of (name, collection_id) keys
-    becomes ONE delete rewrite through the store's CAS loop.
+                        retain_generations: int | None = None) -> None:
+    """Drain DELETE requests (erasure/compliance feed) into the items
+    table: each micro-batch of (name, collection_id) keys becomes ONE
+    delete rewrite through the store's CAS loop.
 
     Idempotent under at-least-once delivery: re-deleting an absent key
     is a no-op rewrite, so replayed batches converge (same contract as
-    incremental_publish's MERGE). Two batch-size regimes (VERDICT-r5
-    task 4b promoted the second from a comment to code):
+    incremental_publish's MERGE). Two batch-size regimes:
 
     - up to ``max_inlist_keys`` keys: the predicate is an IN-list over
       the collected batch (``delete_where``) — one bounded driver
@@ -579,55 +532,42 @@ def incremental_erasure(spark: SparkSession, requests_dir: str,
     prior snapshots still hold the rows until vacuum passes the
     retention horizon, which is the part that actually forgets. Pass
     ``retain_generations`` to close that loop IN the stream: after
-    each batch's delete commits, ``store.vacuum(table, keep_last=N)``
+    each batch's delete commits, ``store.vacuum("items", keep_last=N)``
     expires the history holding the erased bytes (N=1 = current
     snapshot only — full right-to-be-forgotten semantics, at the cost
     of time travel on this table)."""
-    schema = f"{key_cols[0]} string, {key_cols[1]} int"
+    key_cols = ["name", "collection_id"]
+
+    def quoted(name: str) -> str:
+        return "'" + name.replace("'", "''") + "'"
 
     def erase_batch(batch: DataFrame, epoch_id: int) -> None:
-        distinct = batch.dropDuplicates(list(key_cols))
-        # NULL-valued key tuples are ignored in BOTH regimes
-        # (ADVICE-r6): delete_keys filters them by rule; the IN-list
-        # path would otherwise render a NULL literal as an
-        # unresolvable token and crash the stream — share the rule.
-        for c in key_cols:
-            distinct = distinct.filter(F.col(c).isNotNull())
+        # NULL-valued key tuples are ignored in BOTH regimes:
+        # delete_keys filters them by rule, and the IN-list path would
+        # otherwise render a NULL literal as an unresolvable token and
+        # crash the stream — share the rule.
+        distinct = batch.dropDuplicates(key_cols).dropna(subset=key_cols)
         # bounded probe: fetch threshold+1 rows, NEVER the whole batch
         keys = distinct.limit(max_inlist_keys + 1).collect()
         if not keys:
             return
         if len(keys) > max_inlist_keys:
-            store.delete_keys(table, distinct, list(key_cols))
-            if retain_generations is not None:
-                store.vacuum(table, keep_last=retain_generations)
-            return
-
-        def lit_sql(v):
-            if isinstance(v, str):
-                return "'" + v.replace("'", "''") + "'"
-            return str(v)
-        preds = " OR ".join(
-            f"({key_cols[0]} = {lit_sql(r[key_cols[0]])} AND "
-            f"{key_cols[1]} = {lit_sql(r[key_cols[1]])})"
-            for r in keys)
-        store.delete_where(table, preds)
+            store.delete_keys("items", distinct, key_cols)
+        else:
+            store.delete_where("items", " OR ".join(
+                f"(name = {quoted(r.name)} "
+                f"AND collection_id = {r.collection_id})" for r in keys))
         if retain_generations is not None:
-            store.vacuum(table, keep_last=retain_generations)
+            store.vacuum("items", keep_last=retain_generations)
 
-    stream = spark.readStream.schema(schema).parquet(requests_dir)
-    return (
-        stream.writeStream
-        .foreachBatch(erase_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = (spark.readStream.schema("name string, collection_id int")
+              .parquet(requests_dir))
+    drain(stream.writeStream.foreachBatch(erase_batch), checkpoint_dir)
 
 
 def streaming_static_enrich(spark: SparkSession, events_dir: str,
-                            dim_df, checkpoint_dir: str,
-                            query_name: str, out_dir: str | None = None):
+                            dim_df: DataFrame, checkpoint_dir: str,
+                            out_dir: str | None = None) -> DataFrame | None:
     """Y-series stream-STATIC enrichment join: the live purchase
     stream joined against a broadcast dimension (the canonical
     "enrich the firehose with reference data" topology — the
@@ -639,11 +579,12 @@ def streaming_static_enrich(spark: SparkSession, events_dir: str,
     per batch, which is why the drained output equals the batch join
     exactly (the oracle's check). Sinks: the default memory sink
     (``out_dir=None``) is the one-shot drain the registered query
-    uses — Spark's memory sink does NOT support checkpoint RECOVERY,
-    so it only drains a fresh checkpoint; pass ``out_dir`` for the
-    parquet sink, whose checkpoint makes re-triggering exactly-once
-    (redelivery emits nothing; a new input file emits only its own
-    rows — pinned in tests/test_streaming.py)."""
+    uses, and its rows are returned — Spark's memory sink does NOT
+    support checkpoint RECOVERY, so it only drains a fresh checkpoint;
+    pass ``out_dir`` for the parquet sink, whose checkpoint makes
+    re-triggering exactly-once (redelivery emits nothing; a new input
+    file emits only its own rows — pinned in tests/test_streaming.py).
+    The drain runs under :func:`drain_partitions`."""
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
         .filter(F.col("event_type") == "purchase")
@@ -656,13 +597,9 @@ def streaming_static_enrich(spark: SparkSession, events_dir: str,
     enriched = stream.join(F.broadcast(dim_df), "nkey").select(
         "event_id", "region_name", "cents")
     writer = enriched.writeStream.outputMode("append")
-    if out_dir is None:
-        writer = writer.format("memory").queryName(query_name)
-    else:
-        writer = (writer.format("parquet").option("path", out_dir)
-                  .queryName(query_name))
-    return (
-        writer.option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    with drain_partitions(spark):
+        if out_dir is None:
+            return drain_to_memory(spark, writer, checkpoint_dir)
+        drain(writer.format("parquet").option("path", out_dir),
+              checkpoint_dir)
+    return None

@@ -9,7 +9,7 @@ micro-batches, the Structured Streaming counterpart of a Flink
 KeyedProcessFunction.
 
 Semantics: events for a user belong to one session while consecutive
-gaps stay under ``gap``; a larger gap closes the session. Closed
+gaps stay within ``SESSION_GAP_S``; a larger gap closes the session. Closed
 sessions are emitted with (user_id, session_start, session_end,
 n_events); the open tail session stays in state (emitted on the next
 batch that closes it, or via state timeout in an always-on query).
@@ -26,23 +26,36 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from bdc_collection_builder_spark.streaming.incremental import (
+    EVENTS_STREAM_SCHEMA,
+    drain_to_memory,
+)
 
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events int"
 )
 STATE_SCHEMA = "start_us long, last_us long, n int"
+SESSION_GAP_S = 1800
 
 _US = 1_000_000
 
 
-def make_sessionizer(gap_seconds: int = 1800):
-    """Build the applyInPandasWithState function for a gap threshold."""
-    gap_us = gap_seconds * _US
+def streaming_sessionize(spark, events_dir: str,
+                         checkpoint_dir: str) -> DataFrame:
+    """Drain the stateful sessionization query (AvailableNow: drain the
+    backlog, emit every session closed by an observed gap, keep open
+    tails in state for the next run — the ledger-backed late-data model
+    of Y2 applied to streaming state) and return the closed sessions."""
+    gap_us = SESSION_GAP_S * _US
 
     def sessionize(key: tuple, pdfs: Iterator[pd.DataFrame],
                    state: GroupState) -> Iterator[pd.DataFrame]:
+        """Extend the key's open session with this batch's events and
+        emit the sessions a gap closed."""
         (user_id,) = key
         ts_us: list[int] = []
         for pdf in pdfs:
@@ -70,37 +83,24 @@ def make_sessionizer(gap_seconds: int = 1800):
         if closed:
             yield pd.DataFrame({
                 "user_id": [c[0] for c in closed],
-                "session_start": [pd.Timestamp(c[1], unit="us") for c in closed],
-                "session_end": [pd.Timestamp(c[2], unit="us") for c in closed],
+                "session_start": [pd.Timestamp(c[1], unit="us")
+                                  for c in closed],
+                "session_end": [pd.Timestamp(c[2], unit="us")
+                                for c in closed],
                 "n_events": [c[3] for c in closed],
             })
 
-    return sessionize
-
-
-def streaming_sessionize(spark, events_dir: str, checkpoint_dir: str,
-                         gap_seconds: int = 1800, queryName: str = "sessions"):
-    """Start the stateful sessionization query (AvailableNow: drain the
-    backlog, emit every session closed by an observed gap, keep open
-    tails in state for the next run — the ledger-backed late-data model
-    of Y2 applied to streaming state)."""
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    stream = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(events_dir)
     sessions = (
         stream.groupBy("user_id")
         .applyInPandasWithState(
-            make_sessionizer(gap_seconds),
+            sessionize,
             outputStructType=SESSION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("memory").queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_to_memory(spark,
+                           sessions.writeStream.outputMode("append"),
+                           checkpoint_dir)

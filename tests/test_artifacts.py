@@ -8,6 +8,7 @@ problem, not that the engine is wrong.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 
@@ -91,7 +92,6 @@ def test_no_unreferenced_package_helpers():
     wrapper with no caller), so it fails here instead of lingering.
     Decorated definitions (registered queries) and dunders are exempt:
     a registry or the interpreter reaches them without naming them."""
-    import ast
     import collections
     import re
 
@@ -125,7 +125,6 @@ def test_no_spark_action_inside_package_assert():
     asserts, so an action that exists only inside one never runs: a
     lazy sink materialized by ``assert df.count() == n`` writes
     nothing, and whatever reads its output sees it empty."""
-    import ast
 
     actions = {"count", "collect", "first", "take", "toPandas"}
     package = os.path.join(ROOT, "bdc_collection_builder_spark")
@@ -146,3 +145,64 @@ def test_no_spark_action_inside_package_assert():
                        for call in ast.walk(node))
             ]
     assert not found, found
+
+
+def _in_writestream_chain(node) -> bool:
+    """Whether an attribute/call chain passes through ``.writeStream``."""
+    while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+        if isinstance(node, ast.Attribute):
+            if node.attr == "writeStream":
+                return True
+            node = node.value
+        elif isinstance(node, ast.Call):
+            node = node.func
+        else:
+            node = node.value
+    return False
+
+
+def test_only_drain_starts_a_stream():
+    """Only ``streaming/incremental.py:drain`` starts a stream, sets its
+    checkpoint or trigger or waits on it, in the package, the bench and
+    the scripts. A drain hand-rolled elsewhere can wait unchecked and
+    read its sink while the query still runs, or never stop.
+
+    Flagged: any call of ``trigger``, ``toTable``, ``awaitTermination``,
+    ``awaitAnyTermination`` or ``processAllAvailable``; a ``start`` call
+    whose receiver chain goes through ``writeStream`` (so
+    ``Thread.start`` passes); and any ``"checkpointLocation"`` string."""
+    stream_calls = {"trigger", "toTable", "awaitTermination",
+                    "awaitAnyTermination", "processAllAvailable"}
+    drain_file = os.path.join(
+        ROOT, "bdc_collection_builder_spark", "streaming", "incremental.py")
+    paths = [os.path.join(ROOT, "bench.py")]
+    for top in ("bdc_collection_builder_spark", "scripts"):
+        for dirpath, dirs, files in os.walk(os.path.join(ROOT, top)):
+            paths += [os.path.join(dirpath, name)
+                      for name in files if name.endswith(".py")]
+    found = set()
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        allowed = set()
+        if path == drain_file:
+            drain = next((node for node in tree.body
+                          if isinstance(node, ast.FunctionDef)
+                          and node.name == "drain"), None)
+            if drain is not None:
+                allowed = set(ast.walk(drain))
+        for node in ast.walk(tree):
+            if node in allowed:
+                continue
+            if isinstance(node, ast.Call) and isinstance(
+                    node.func, ast.Attribute):
+                attr = node.func.attr
+                hit = attr in stream_calls or (
+                    attr == "start"
+                    and _in_writestream_chain(node.func.value))
+            else:
+                hit = (isinstance(node, ast.Constant)
+                       and node.value == "checkpointLocation")
+            if hit:
+                found.add(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not found, sorted(found)

@@ -24,15 +24,13 @@ def test_incremental_publish_merges_idempotently(spark, tmp_path):
 
     # Drop the full item set (overlapping the 10 existing) as a backlog.
     fx["items"].write.mode("overwrite").parquet(incoming)
-    q = incremental_publish(spark, incoming, store, checkpoint)
-    q.awaitTermination(120)
+    incremental_publish(spark, incoming, store, checkpoint)
     n_after_first = store.read("items").count()
     assert n_after_first == fx["items"].count(), "all items merged once"
 
     # Re-deliver the same files under a fresh checkpoint (simulated
     # at-least-once re-delivery): MERGE keys keep the table stable.
-    q2 = incremental_publish(spark, incoming, store, str(tmp_path / "ckpt2"))
-    q2.awaitTermination(120)
+    incremental_publish(spark, incoming, store, str(tmp_path / "ckpt2"))
     assert store.read("items").count() == n_after_first
 
 
@@ -43,9 +41,7 @@ def test_streaming_windowed_counts(spark, tmp_path, sf_dir):
     (load_table(spark, sf_dir, "events")
      .withColumn("ts", F.col("ts").cast("timestamp"))
      .write.mode("overwrite").parquet(events_dir))
-    q = streaming_status_counts(spark, events_dir, str(tmp_path / "ckpt3"))
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM status_counts")
+    out = streaming_status_counts(spark, events_dir, str(tmp_path / "ckpt3"))
     batch = (load_table(spark, sf_dir, "events")
              .groupBy(F.window("ts", "10 minutes"), "event_type")
              .agg(F.count("*").alias("n")))
@@ -66,11 +62,9 @@ def test_stateful_sessionize_matches_batch(spark, tmp_path, sf_dir):
     events_dir = str(tmp_path / "sess_events")
     (load_table(spark, sf_dir, "events")
      .write.mode("overwrite").parquet(events_dir))
-    q = streaming_sessionize(spark, events_dir, str(tmp_path / "ckpt_sess"),
-                             gap_seconds=1800, queryName="sessions_t")
-    q.awaitTermination(180)
-    got = spark.sql(
-        "SELECT user_id, session_start, n_events FROM sessions_t")
+    got = streaming_sessionize(
+        spark, events_dir, str(tmp_path / "ckpt_sess")
+    ).select("user_id", "session_start", "n_events")
 
     # Batch truth: gap-based sessions; the stream leaves each user's
     # LAST session open in state, so compare against all-but-last.
@@ -117,16 +111,14 @@ def test_incremental_dedup_across_batches(spark, tmp_path, sf_dir):
     # batch 1: docs 0-19; batch 2 arrives later with overlap 10-29 as
     # re-uploads under new ids (same text => same content hash)
     docs.filter(F.col("doc_id") < 20).write.mode("append").parquet(incoming)
-    q = incremental_dedup(spark, incoming, seen, out, ck)
-    q.awaitTermination()
+    incremental_dedup(spark, incoming, seen, out, ck)
     n_first = spark.read.parquet(out).count()
     assert n_first == 20
 
     (docs.filter((F.col("doc_id") >= 10) & (F.col("doc_id") < 30))
      .select((F.col("doc_id") + 5000).alias("doc_id"), "text")
      .write.mode("append").parquet(incoming))
-    q = incremental_dedup(spark, incoming, seen, out, ck)
-    q.awaitTermination()
+    incremental_dedup(spark, incoming, seen, out, ck)
     final = spark.read.parquet(out)
     # only the 10 genuinely-new texts (20-29) got through batch 2
     assert final.count() == 30
@@ -156,8 +148,7 @@ def test_watermark_append_drops_late_and_emits_once(spark, tmp_path):
            (2, "2026-01-01 10:04:00", 1, "click", 1.0, "{}"),
            (3, "2026-01-01 10:09:00", 2, "click", 1.0, "{}"),
            (4, "2026-01-01 11:00:00", 2, "click", 1.0, "{}")])
-    q = streaming_windowed_counts_append(spark, events_dir, ck, out)
-    q.awaitTermination(120)
+    streaming_windowed_counts_append(spark, events_dir, ck, out)
     out1 = {(str(r.window_start), r.n)
             for r in spark.read.parquet(out).collect()}
     assert ("2026-01-01 10:00:00", 3) in out1
@@ -169,8 +160,7 @@ def test_watermark_append_drops_late_and_emits_once(spark, tmp_path):
     # closes the 11:00 window
     write([(5, "2026-01-01 10:05:00", 3, "click", 1.0, "{}"),
            (6, "2026-01-01 12:00:00", 3, "click", 1.0, "{}")])
-    q = streaming_windowed_counts_append(spark, events_dir, ck, out)
-    q.awaitTermination(120)
+    streaming_windowed_counts_append(spark, events_dir, ck, out)
     # the sink dir is cumulative: batch 2 must add ONLY the newly-closed
     # 11:00 window — one 10:00 row total (never revised, late row dropped)
     rows = [(str(r.window_start), r.n)
@@ -206,8 +196,7 @@ def test_checkpoint_restart_skips_committed_batches(spark, tmp_path):
     first = fx["items"].limit(10)
     first.coalesce(1).write.mode("overwrite").parquet(
         str(incoming / "wave1"))
-    q = incremental_publish(spark, str(incoming / "wave1"), counting, ckpt)
-    q.awaitTermination(120)
+    incremental_publish(spark, str(incoming / "wave1"), counting, ckpt)
     assert sum(seen) == 10
     n_first = counting.read("items").count()
     assert n_first == 10
@@ -216,8 +205,7 @@ def test_checkpoint_restart_skips_committed_batches(spark, tmp_path):
     fx["items"].coalesce(1).write.mode("append").parquet(
         str(incoming / "wave1"))
     seen.clear()
-    q2 = incremental_publish(spark, str(incoming / "wave1"), counting, ckpt)
-    q2.awaitTermination(120)
+    incremental_publish(spark, str(incoming / "wave1"), counting, ckpt)
     # only the new file's rows flowed — wave 1's committed batch did not
     assert sum(seen) == fx["items"].count()
     assert counting.read("items").count() == fx["items"].count()
@@ -244,9 +232,8 @@ def test_streaming_hll_sketches_match_batch_rollup(spark, tmp_path, sf_dir):
         .write.mode("append").parquet(events_dir)
 
     out_dir = str(tmp_path / "sketches")
-    q = streaming_hll_sketches(spark, events_dir,
-                               str(tmp_path / "ckpt_hll"), out_dir)
-    q.awaitTermination(120)
+    streaming_hll_sketches(spark, events_dir,
+                           str(tmp_path / "ckpt_hll"), out_dir)
 
     batch = {r.event_type: r.approx for r in
              events.groupBy("event_type")
@@ -295,9 +282,8 @@ def test_incremental_near_dedup_across_batches(spark, tmp_path, sf_dir):
 
     state = str(tmp_path / "nd_state")
     out = str(tmp_path / "nd_out")
-    q = incremental_near_dedup(spark, incoming, state, out,
-                               str(tmp_path / "nd_ckpt"))
-    q.awaitTermination(180)
+    incremental_near_dedup(spark, incoming, state, out,
+                           str(tmp_path / "nd_ckpt"))
 
     accepted = {r.doc_id for r in spark.read.parquet(out).collect()}
     n_planted = docs.filter(F.col("doc_id") % 10 == 0).count()
@@ -324,9 +310,8 @@ def test_incremental_near_dedup_across_batches(spark, tmp_path, sf_dir):
     # redelivery: re-run the SAME files under a fresh checkpoint; the
     # accepted set must not grow (every doc self-collides in state)
     n_before = spark.read.parquet(out).count()
-    q2 = incremental_near_dedup(spark, incoming, state, out,
-                                str(tmp_path / "nd_ckpt2"))
-    q2.awaitTermination(180)
+    incremental_near_dedup(spark, incoming, state, out,
+                           str(tmp_path / "nd_ckpt2"))
     assert spark.read.parquet(out).count() == n_before
 
 
@@ -353,9 +338,8 @@ def test_incremental_near_dedup_short_docs_idempotent(spark, tmp_path):
 
     state = str(tmp_path / "sd_state")
     out = str(tmp_path / "sd_out")
-    q = incremental_near_dedup(spark, incoming, state, out,
-                               str(tmp_path / "sd_ckpt"))
-    q.awaitTermination(120)
+    incremental_near_dedup(spark, incoming, state, out,
+                           str(tmp_path / "sd_ckpt"))
     accepted = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert accepted == {1, 2, 3}, accepted   # re-upload 100 dropped
     # short docs live in state: shingle table covers every accepted id
@@ -363,9 +347,8 @@ def test_incremental_near_dedup_short_docs_idempotent(spark, tmp_path):
                  spark.read.parquet(f"{state}/shingles").collect()}
     assert state_ids == {1, 2, 3}
     # full redelivery under a fresh checkpoint: nothing appended
-    q2 = incremental_near_dedup(spark, incoming, state, out,
-                                str(tmp_path / "sd_ckpt2"))
-    q2.awaitTermination(120)
+    incremental_near_dedup(spark, incoming, state, out,
+                           str(tmp_path / "sd_ckpt2"))
     assert spark.read.parquet(out).count() == 3
     assert spark.read.parquet(f"{state}/shingles").count() == \
         len({(r.doc_id, r.shingle) for r in
@@ -376,8 +359,6 @@ def test_incremental_near_dedup_short_docs_idempotent(spark, tmp_path):
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path, sf_dir):
     """Stream-stream interval join over SPLIT sources (errors stream ≠
     firehose stream) drains to exactly the batch interval-join pairs."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from bdc_collection_builder_spark.sources.tables import load_table
@@ -390,12 +371,10 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path, sf_dir):
     firehose_dir = str(tmp_path / "firehose")
     events.filter(F.col("event_type") == "error").write.parquet(errors_dir)
     events.write.parquet(firehose_dir)
-    qname = f"ssj_test_{uuid.uuid4().hex[:8]}"
-    q = streaming_interval_join(spark, errors_dir, firehose_dir,
-                                str(tmp_path / "ckpt"), qname)
-    q.awaitTermination(300)
     got = {(r.error_id, r.followup_id)
-           for r in spark.sql(f"SELECT * FROM {qname}").collect()}
+           for r in streaming_interval_join(
+               spark, errors_dir, firehose_dir,
+               str(tmp_path / "ckpt")).collect()}
 
     e = events.filter(F.col("event_type") == "error").select(
         F.col("user_id").alias("e_user"), F.col("event_id").alias("error_id"),
@@ -425,9 +404,8 @@ def test_transactional_publish_items_and_ledger_atomic(spark, tmp_path):
     incoming = str(tmp_path / "txn_incoming")
     fx["items"].limit(20).write.parquet(incoming)
 
-    q = incremental_publish_transactional(
+    incremental_publish_transactional(
         spark, incoming, store, str(tmp_path / "txn_ckpt"))
-    q.awaitTermination(300)
     n_items = store.read("items").count()
     n_tasks = store.read("tasks").count()
     assert n_items == 20
@@ -438,9 +416,8 @@ def test_transactional_publish_items_and_ledger_atomic(spark, tmp_path):
     assert published == 20, "every published item has its ledger row"
 
     # redelivery: fresh checkpoint reprocesses everything — idempotent
-    q2 = incremental_publish_transactional(
+    incremental_publish_transactional(
         spark, incoming, store, str(tmp_path / "txn_ckpt2"))
-    q2.awaitTermination(300)
     assert store.read("items").count() == n_items
     assert store.read("tasks").count() == n_tasks
 
@@ -510,6 +487,7 @@ def test_streaming_ivf_maintenance_converges(spark, tmp_path, sf_dir):
         upsert_ivf_index,
     )
     from bdc_collection_builder_spark.sources.tables import load_table
+    from bdc_collection_builder_spark.streaming.incremental import drain
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
@@ -526,12 +504,9 @@ def test_streaming_ivf_maintenance_converges(spark, tmp_path, sf_dir):
 
     stream = (spark.readStream.schema(emb.schema)
               .option("maxFilesPerTrigger", 1).parquet(incoming))
-    q = (stream.writeStream
-         .foreachBatch(lambda batch, _id: upsert_ivf_index(
-             spark, path, batch))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    drain(stream.writeStream.foreachBatch(
+        lambda batch, _id: upsert_ivf_index(spark, path, batch)),
+        str(tmp_path / "ckpt"))
 
     got = spark.read.parquet(f"{path}/vectors")
     assert got.count() == emb.count()
@@ -565,9 +540,7 @@ def test_incremental_erasure_deletes_and_is_idempotent(spark, tmp_path):
     requests = str(tmp_path / "requests")
     victims.write.mode("overwrite").parquet(requests)
 
-    q = incremental_erasure(spark, requests, store,
-                            str(tmp_path / "eckpt"))
-    q.awaitTermination(120)
+    incremental_erasure(spark, requests, store, str(tmp_path / "eckpt"))
 
     after = store.read("items")
     assert after.count() == n0 - n_victims
@@ -579,16 +552,14 @@ def test_incremental_erasure_deletes_and_is_idempotent(spark, tmp_path):
     assert after.exceptAll(
         survivors_before.select(*after.columns)).count() == 0
     # re-delivery under a fresh checkpoint: converges, no further loss
-    q2 = incremental_erasure(spark, requests, store,
-                             str(tmp_path / "eckpt2"))
-    q2.awaitTermination(120)
+    incremental_erasure(spark, requests, store, str(tmp_path / "eckpt2"))
     assert store.read("items").count() == n0 - n_victims
     # MVCC: pre-erasure snapshot intact until vacuumed past horizon
     assert store.read_at("items", gen0).count() == n0
 
 
 def test_incremental_erasure_large_batch_antijoin_path(spark, tmp_path):
-    """VERDICT-r5 task 4b: batches above max_inlist_keys route through
+    """Batches above max_inlist_keys route through
     store.delete_keys (anti-join MERGE, no data-sized driver collect)
     and must produce exactly the same result as the IN-list path."""
     from bdc_collection_builder_spark.streaming.incremental import (
@@ -606,10 +577,8 @@ def test_incremental_erasure_large_batch_antijoin_path(spark, tmp_path):
     victims.write.mode("overwrite").parquet(requests)
 
     # threshold of 3 forces the 9-key batch onto the anti-join path
-    q = incremental_erasure(spark, requests, store,
-                            str(tmp_path / "eckpt-big"),
-                            max_inlist_keys=3)
-    q.awaitTermination(120)
+    incremental_erasure(spark, requests, store,
+                        str(tmp_path / "eckpt-big"), max_inlist_keys=3)
 
     after = store.read("items")
     assert after.count() == n0 - n_victims
@@ -618,7 +587,7 @@ def test_incremental_erasure_large_batch_antijoin_path(spark, tmp_path):
 
 def test_incremental_erasure_ignores_null_keys_small_batch(
         spark, tmp_path):
-    """ADVICE-r6: NULL key tuples must be ignored in BOTH regimes. The
+    """NULL key tuples must be ignored in BOTH regimes. The
     small-batch IN-list path used to render a NULL as the bare token
     `None`, producing an unresolvable predicate that crashed the
     streaming query; now both paths share delete_keys' documented
@@ -644,9 +613,8 @@ def test_incremental_erasure_ignores_null_keys_small_batch(
     with_null.write.mode("overwrite").parquet(requests)
 
     # 4 keys < the default threshold: IN-list regime
-    q = incremental_erasure(spark, requests, store,
-                            str(tmp_path / "eckpt-null"))
-    q.awaitTermination(120)
+    incremental_erasure(spark, requests, store,
+                        str(tmp_path / "eckpt-null"))
 
     after = store.read("items")
     assert after.count() == n0 - n_victims
@@ -741,10 +709,8 @@ def test_incremental_erasure_with_retention_forgets(spark, tmp_path):
     requests = str(tmp_path / "requests-ret")
     victims.write.mode("overwrite").parquet(requests)
 
-    q = incremental_erasure(spark, requests, store,
-                            str(tmp_path / "eckpt-ret"),
-                            retain_generations=1)
-    q.awaitTermination(120)
+    incremental_erasure(spark, requests, store,
+                        str(tmp_path / "eckpt-ret"), retain_generations=1)
 
     assert store.read("items").count() == n0 - 5
     gens = store.snapshots("items")
@@ -752,7 +718,7 @@ def test_incremental_erasure_with_retention_forgets(spark, tmp_path):
 
 
 def test_static_enrich_equals_batch_and_is_exactly_once(spark, tmp_path):
-    """streaming_static_enrich (the round-9-pool query's engine):
+    """streaming_static_enrich (the engine of st_stream_static_enrich):
     (1) the one-shot memory drain emits exactly the batch
     broadcast-join's rows (the join is stateless, so streaming ==
     batch row-for-row); (2) on the PARQUET sink — the form whose
@@ -786,29 +752,23 @@ def test_static_enrich_equals_batch_and_is_exactly_once(spark, tmp_path):
     }
 
     # (1) memory one-shot drain == batch join
-    q = streaming_static_enrich(spark, events_dir, dim,
-                                str(tmp_path / "ckpt_mem"), "sse_t1")
-    q.awaitTermination(120)
     got = {(r.event_id, r.region_name, r.cents) for r in
-           spark.sql("SELECT * FROM sse_t1").collect()}
+           streaming_static_enrich(spark, events_dir, dim,
+                                   str(tmp_path / "ckpt_mem")).collect()}
     assert got == want and len(got) == 40
 
     # (2) parquet sink, fresh checkpoint: same rows; then redelivery
     # through the SAME checkpoint is a no-op
     ckpt = str(tmp_path / "ckpt_pq")
     out = str(tmp_path / "sse_out")
-    q2 = streaming_static_enrich(spark, events_dir, dim, ckpt,
-                                 "sse_t2", out_dir=out)
-    q2.awaitTermination(120)
+    streaming_static_enrich(spark, events_dir, dim, ckpt, out_dir=out)
 
     def sink_rows():
         return {(r.event_id, r.region_name, r.cents)
                 for r in spark.read.parquet(out).collect()}
 
     assert sink_rows() == want
-    q3 = streaming_static_enrich(spark, events_dir, dim, ckpt,
-                                 "sse_t3", out_dir=out)
-    q3.awaitTermination(120)
+    streaming_static_enrich(spark, events_dir, dim, ckpt, out_dir=out)
     assert sink_rows() == want  # nothing duplicated
 
     # (3) one new file -> exactly its purchase rows append
@@ -816,9 +776,7 @@ def test_static_enrich_equals_batch_and_is_exactly_once(spark, tmp_path):
               for i in range(5)]
     spark.createDataFrame(batch2, EVENTS_STREAM_SCHEMA) \
         .coalesce(1).write.mode("append").parquet(events_dir)
-    q4 = streaming_static_enrich(spark, events_dir, dim, ckpt,
-                                 "sse_t4", out_dir=out)
-    q4.awaitTermination(120)
+    streaming_static_enrich(spark, events_dir, dim, ckpt, out_dir=out)
     assert sink_rows() == want | {
         (1000 + i, f"region-{i % 25}", 500) for i in range(5)}
 
@@ -845,3 +803,42 @@ def test_drain_partitions_caps_at_cores_and_restores(spark):
         assert spark.conf.get(key) == "37"
     finally:
         spark.conf.set(key, before)
+
+
+def test_drain_times_out_loudly(spark, tmp_path, monkeypatch):
+    """A drain still running at DRAIN_TIMEOUT_S is stopped and raises,
+    instead of returning while the query keeps writing its sink."""
+    import time
+
+    from bdc_collection_builder_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "DRAIN_TIMEOUT_S", 1)
+    src = str(tmp_path / "slow_in")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    with pytest.raises(TimeoutError):
+        incremental.drain(
+            stream.writeStream.foreachBatch(lambda batch, _id: time.sleep(3)),
+            str(tmp_path / "slow_ckpt"))
+    assert not spark.streams.active
+
+
+def test_registry_drains_leave_no_view_or_stream(spark, sf_dir):
+    """A registry memory drain leaves the session as it found it: no
+    temp view holding its rows in the driver heap, no running query.
+    Its rows still read after the view is gone."""
+    from bdc_collection_builder_spark.plans.registry import (
+        QUERY_REGISTRY,
+        all_queries,
+    )
+
+    all_queries()
+    run = QUERY_REGISTRY["st_stream_outer_join"].spark_fn
+    tables = spark.catalog.listTables()
+    got = []
+    for _ in range(2):
+        got.append(sorted(map(tuple, run(spark, sf_dir).collect()),
+                          key=repr))
+        assert spark.catalog.listTables() == tables
+        assert not spark.streams.active
+    assert got[0] == got[1] and got[0]
